@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints JSON lines {"metric","value","unit","queries","sf"} — the full
   * per-query record first (total_full), then the compact headline line,
@@ -89,33 +87,23 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // SPARK_GRAFT_NO_EXT=1: diagnostic A/B knob isolating the
     // extensions' injected optimizer rule/strategy cost — functions are
     // session-registered instead, so every query still runs
     val noExt = sys.env.contains("SPARK_GRAFT_NO_EXT")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-    val builder1 = (if (noExt) builder0
-      else builder0.withExtensions(new GraftExtensions))
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanos-generation events testdata reads as BIGINT (see Engine.table)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_CONF="k=v;k2=v2": extra confs for A/B experiments
     // (e.g. adaptive.coalescePartitions.parallelismFirst) without a
     // recompile between runs
-    val spark = sys.env.get("SPARK_GRAFT_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty)
-      .foldLeft(builder1) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k.trim, v.trim) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k.trim -> v.trim }
+    val spark = Engine.session(cpus.toInt, "graft-bench", Map(
+        "spark.sql.shuffle.partitions" ->
+          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus),
+        "spark.sql.adaptive.enabled" ->
+          sys.env.getOrElse("SPARK_GRAFT_AQE", "true")) ++
+      (if (noExt) Map("spark.sql.extensions" -> "") else Map.empty) ++
+      extraConf)
     if (noExt) GraftFunctionsRegistry.registerAll(spark)
 
     def run(name: String): Unit =

@@ -2,13 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, ExpressionInfo}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{
-  CosineSim, Gcd, HyperplaneSignature, InSetCounts, Lcm, MinHash64,
-  NearestCells, NGramsGenerator, PortableMinHash, PortableSimhash30,
-  RollingFpPortable, RollingFpXx, Shingles, SimHash63, Sketches}
+import graft.functions.{GraftWindowFunctions, NumberTheory, Sketches}
 import graft.plans.{TopKAggregationRule, TopKAggStrategy}
 
 /** Library entry point for `spark.sql.extensions=graft.GraftExtensions`
@@ -19,91 +15,14 @@ import graft.plans.{TopKAggregationRule, TopKAggStrategy}
   * session-scoped and complements this. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_gcd"),
-      new ExpressionInfo(classOf[Gcd].getName, "graft_gcd"),
-      exprs => Gcd(Cast(exprs(0), LongType), Cast(exprs(1), LongType))))
-    e.injectFunction((
-      FunctionIdentifier("graft_lcm"),
-      new ExpressionInfo(classOf[Lcm].getName, "graft_lcm"),
-      exprs => Lcm(Cast(exprs(0), LongType), Cast(exprs(1), LongType))))
-    // codegen'd sketch/pipeline primitives (same factories as
-    // Sketches.register, available to every extension-built session)
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash63"),
-      new ExpressionInfo(classOf[SimHash63].getName, "graft_simhash63"),
-      exprs => SimHash63(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_simhash30_portable"),
-      new ExpressionInfo(classOf[PortableSimhash30].getName,
-        "graft_simhash30_portable"),
-      exprs => PortableSimhash30(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_hyperplane_sig"),
-      new ExpressionInfo(classOf[HyperplaneSignature].getName,
-        "graft_hyperplane_sig"),
-      exprs => HyperplaneSignature(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash64"),
-      new ExpressionInfo(classOf[MinHash64].getName, "graft_minhash64"),
-      exprs => MinHash64(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_minhash_portable"),
-      new ExpressionInfo(classOf[PortableMinHash].getName,
-        "graft_minhash_portable"),
-      exprs => PortableMinHash(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      exprs => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_nearest_cells_l2"),
-      new ExpressionInfo(classOf[NearestCells].getName,
-        "graft_nearest_cells_l2"),
-      exprs => NearestCells(exprs(0), exprs(1), exprs(2), byL2 = true)))
-    e.injectFunction((
-      FunctionIdentifier("graft_nearest_cells_cos"),
-      new ExpressionInfo(classOf[NearestCells].getName,
-        "graft_nearest_cells_cos"),
-      exprs => NearestCells(exprs(0), exprs(1), exprs(2), byL2 = false)))
-    e.injectFunction((
-      FunctionIdentifier("graft_pq_codes"),
-      new ExpressionInfo(classOf[functions.PqCodes].getName,
-        "graft_pq_codes"),
-      exprs => functions.PqCodes(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
-      exprs => Shingles(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_inset_counts"),
-      new ExpressionInfo(classOf[InSetCounts].getName, "graft_inset_counts"),
-      exprs => InSetCounts(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_rolling_fp"),
-      new ExpressionInfo(classOf[RollingFpXx].getName, "graft_rolling_fp"),
-      exprs => RollingFpXx(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_rolling_fp_portable"),
-      new ExpressionInfo(classOf[RollingFpPortable].getName,
-        "graft_rolling_fp_portable"),
-      exprs => RollingFpPortable(exprs.head)))
-    // table function (UDTF analogue): custom Generator
-    e.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[NGramsGenerator].getName, "graft_ngrams"),
-      exprs => NGramsGenerator(exprs(0), exprs(1))))
-    // sketch-aggregate tier (binary-state TypedImperativeAggregates) +
-    // their scalar companions — extension-built sessions get the same
-    // SQL surface as GraftFunctionsRegistry.registerAll sessions. The
-    // builders are shared with each object's register() so argument
-    // validation stays in one place.
-    Sketches.aggregateBuilders.foreach { case (name, clazz, builder) =>
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(clazz, name), builder))
-    }
-    // UDWF tier (AggregateWindowFunctions: ewma fold, GROUPS frame)
-    graft.functions.GraftWindowFunctions.builders.foreach {
+    // gcd/lcm, the codegen'd sketch/pipeline kernels, the sketch-aggregate
+    // tier (binary-state TypedImperativeAggregates + their scalar
+    // companions) and the UDWF tier (ewma fold, GROUPS frame). The tables
+    // are shared with each object's register(), so extension-built
+    // sessions get the same SQL surface as GraftFunctionsRegistry.
+    // registerAll ones and argument validation stays in one place.
+    (NumberTheory.builders ++ Sketches.scalarBuilders ++
+      Sketches.aggregateBuilders ++ GraftWindowFunctions.builders).foreach {
       case (name, clazz, builder) =>
         e.injectFunction((FunctionIdentifier(name),
           new ExpressionInfo(clazz, name), builder))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,19 +11,7 @@ object Verify {
     // 4/12/16 this round), so use the cores we have, capped sanely
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(12, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // DuckDB-readable timestamps in the dumped parquet (not INT96)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // nanos-generation events testdata reads as BIGINT (see Engine.table)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 restricts the dump
     // to named queries (the driver sets no filter → full run)

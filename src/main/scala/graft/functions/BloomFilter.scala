@@ -186,8 +186,5 @@ object Bloom {
         exprs => BloomContains(exprs(0), exprs(1)))))
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
+    Sketches.registerMissing(spark, builders)
 }

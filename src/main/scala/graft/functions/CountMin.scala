@@ -156,8 +156,5 @@ object CountMin {
         exprs => CountMinEstimate(exprs(0), exprs(1)))))
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
+    Sketches.registerMissing(spark, builders)
 }

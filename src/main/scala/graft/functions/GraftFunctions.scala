@@ -173,21 +173,25 @@ object GraftFunctions {
     sequence(start, stop, step)
 
   // ── SQL registration (Spark 4 SQL UDFs, planner-inlined) ──────────────
-  def registerSql(spark: SparkSession): Unit = {
-    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION date_bin(
+  def registerSql(spark: SparkSession): Unit = Seq(
+    "date_bin" -> """CREATE OR REPLACE TEMPORARY FUNCTION date_bin(
       stride_us BIGINT, src TIMESTAMP, origin TIMESTAMP) RETURNS TIMESTAMP
       RETURN timestamp_micros(unix_micros(src) - unix_micros(origin)
         - pmod(unix_micros(src) - unix_micros(origin), stride_us)
-        + unix_micros(origin))""")
-    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION nvl2_(
+        + unix_micros(origin))""",
+    "nvl2_" -> """CREATE OR REPLACE TEMPORARY FUNCTION nvl2_(
       t STRING, a STRING, b STRING) RETURNS STRING
-      RETURN CASE WHEN t IS NOT NULL THEN a ELSE b END""")
-    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION iszero(x DOUBLE)
-      RETURNS BOOLEAN RETURN x = 0.0d""")
-    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION array_pop_front(
+      RETURN CASE WHEN t IS NOT NULL THEN a ELSE b END""",
+    "iszero" -> """CREATE OR REPLACE TEMPORARY FUNCTION iszero(x DOUBLE)
+      RETURNS BOOLEAN RETURN x = 0.0d""",
+    "array_pop_front" -> """CREATE OR REPLACE TEMPORARY FUNCTION array_pop_front(
       a ARRAY<BIGINT>) RETURNS ARRAY<BIGINT>
-      RETURN slice(a, 2, greatest(size(a) - 1, 0))""")
-    spark.sql("""CREATE OR REPLACE TEMPORARY FUNCTION to_unixtime(
+      RETURN slice(a, 2, greatest(size(a) - 1, 0))""",
+    "to_unixtime" -> """CREATE OR REPLACE TEMPORARY FUNCTION to_unixtime(
       t TIMESTAMP) RETURNS BIGINT RETURN unix_timestamp(t)""")
-  }
+    .foreach { case (name, ddl) =>
+      // once per session registry, like Sketches.registerMissing
+      if (!spark.sessionState.functionRegistry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name))) spark.sql(ddl)
+    }
 }

@@ -84,14 +84,11 @@ object NumberTheory {
   def gcd(a: Column, b: Column): Column = call_function("graft_gcd", a, b)
   def lcm(a: Column, b: Column): Column = call_function("graft_lcm", a, b)
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gcd",
-      exprs => Gcd(Cast(exprs(0), LongType), Cast(exprs(1), LongType)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lcm",
-      exprs => Lcm(Cast(exprs(0), LongType), Cast(exprs(1), LongType)),
-      "built-in")
-  }
+  val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_gcd", classOf[Gcd].getName,
+      exprs => Gcd(Cast(exprs(0), LongType), Cast(exprs(1), LongType))),
+    ("graft_lcm", classOf[Lcm].getName,
+      exprs => Lcm(Cast(exprs(0), LongType), Cast(exprs(1), LongType))))
+
+  def register(spark: SparkSession): Unit = Sketches.registerMissing(spark, builders)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -1242,53 +1242,58 @@ object Sketches {
     call_function("graft_minhash_portable", text,
       org.apache.spark.sql.functions.typedlit(params))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash63", exprs => SimHash63(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash30_portable",
-      exprs => PortableSimhash30(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperplane_sig",
-      exprs => HyperplaneSignature(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash64", exprs => MinHash64(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_portable",
-      exprs => PortableMinHash(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_cells_l2",
-      exprs => NearestCells(exprs(0), exprs(1), exprs(2), byL2 = true),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_cells_cos",
-      exprs => NearestCells(exprs(0), exprs(1), exprs(2), byL2 = false),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_codes", exprs => PqCodes(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => Shingles(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_inset_counts",
-      exprs => InSetCounts(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_fp", exprs => RollingFpXx(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_fp_portable",
-      exprs => RollingFpPortable(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dup_window_hashes",
-      exprs => DupWindowHashes(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hashed_buckets",
-      exprs => HashedBuckets(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gather_sum",
-      exprs => GatherSum(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => NGramsGenerator(exprs(0), exprs(1)), "built-in")
+  /** Every scalar kernel's (name, class, builder): GraftExtensions
+    * injects these, [[register]] adds them to other sessions. */
+  val scalarBuilders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_simhash63", classOf[SimHash63].getName,
+      exprs => SimHash63(exprs.head)),
+    ("graft_simhash30_portable", classOf[PortableSimhash30].getName,
+      exprs => PortableSimhash30(exprs(0), exprs(1))),
+    ("graft_hyperplane_sig", classOf[HyperplaneSignature].getName,
+      exprs => HyperplaneSignature(exprs(0), exprs(1))),
+    ("graft_minhash64", classOf[MinHash64].getName,
+      exprs => MinHash64(exprs(0), exprs(1))),
+    ("graft_minhash_portable", classOf[PortableMinHash].getName,
+      exprs => PortableMinHash(exprs(0), exprs(1))),
+    ("graft_cosine", classOf[CosineSim].getName,
+      exprs => CosineSim(exprs(0), exprs(1))),
+    ("graft_nearest_cells_l2", classOf[NearestCells].getName,
+      exprs => NearestCells(exprs(0), exprs(1), exprs(2), byL2 = true)),
+    ("graft_nearest_cells_cos", classOf[NearestCells].getName,
+      exprs => NearestCells(exprs(0), exprs(1), exprs(2), byL2 = false)),
+    ("graft_pq_codes", classOf[PqCodes].getName,
+      exprs => PqCodes(exprs(0), exprs(1))),
+    ("graft_shingles", classOf[Shingles].getName,
+      exprs => Shingles(exprs(0), exprs(1))),
+    ("graft_inset_counts", classOf[InSetCounts].getName,
+      exprs => InSetCounts(exprs(0), exprs(1))),
+    ("graft_rolling_fp", classOf[RollingFpXx].getName,
+      exprs => RollingFpXx(exprs.head)),
+    ("graft_rolling_fp_portable", classOf[RollingFpPortable].getName,
+      exprs => RollingFpPortable(exprs.head)),
+    ("graft_dup_window_hashes", classOf[DupWindowHashes].getName,
+      exprs => DupWindowHashes(exprs(0), exprs(1))),
+    ("graft_hashed_buckets", classOf[HashedBuckets].getName,
+      exprs => HashedBuckets(exprs(0), exprs(1))),
+    ("graft_gather_sum", classOf[GatherSum].getName,
+      exprs => GatherSum(exprs(0), exprs(1))),
+    // table function (UDTF analogue): custom Generator
+    ("graft_ngrams", classOf[NGramsGenerator].getName,
+      exprs => NGramsGenerator(exprs(0), exprs(1))))
+
+  /** Register each (name, class, builder) the session's function registry
+    * does not have yet. Extension-built sessions already carry the
+    * graft_* functions, and callers register on every query build:
+    * replacing an existing entry would only log Spark's re-registration
+    * WARN. */
+  private[graft] def registerMissing(spark: SparkSession,
+      builders: Seq[(String, String, Seq[Expression] => Expression)]): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, _, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, scalarBuilders)
 }

@@ -270,8 +270,5 @@ object Theta {
       arity("graft_theta_intersect", 2)(e => ThetaIntersect(e(0), e(1)))))
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
+    Sketches.registerMissing(spark, builders)
 }

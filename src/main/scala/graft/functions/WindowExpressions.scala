@@ -408,8 +408,5 @@ object GraftWindowFunctions {
         GroupsEdge(e(0), e(1), e(2), isFirst = false))))
 
   def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
+    Sketches.registerMissing(spark, builders)
 }

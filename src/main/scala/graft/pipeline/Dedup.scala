@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -82,13 +82,17 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     graft.functions.Sketches.register(df.sparkSession)
     val r = numHashes / bands
-    // persist: signatures feed the band explode AND both sides of the
-    // candidate join AND the verify join — without it the shingling +
-    // k-hash work reruns per consumer (at 100 TB: checkpoint to storage)
-    val base = df.select(col(idCol).as("id"),
-        shingles(col(textCol), shingleSize).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-      .persist()
+    // materialized once: signatures feed the band explode AND both sides
+    // of the candidate join AND the verify join — without it the
+    // shingling + k-hash work reruns per consumer. Materialize.checkpoint,
+    // not persist (r14): no CacheManager entry that sibling plans could
+    // pick up, and the blocks are released below once the eager output
+    // copy owns the pairs.
+    val base = Materialize.checkpoint(
+      df.select(col(idCol).as("id"),
+          shingles(col(textCol), shingleSize).as("sh"))
+        .withColumn("sig", minhashSignature(col("sh"), numHashes)),
+      eager = true)
 
     val banded = base
       .select(col("id"), col("sig"),
@@ -104,17 +108,21 @@ object Dedup {
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .distinct()
 
-    cand
-      .join(base.select(col("id").as("id_a"), col("sh").as("sh_a"),
-        col("sig").as("sig_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("sh").as("sh_b"),
-        col("sig").as("sig_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(estJaccard(col("sig_a"), col("sig_b"), numHashes), 4)
-          .as("est_jaccard"),
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-          / size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val out = Materialize.checkpoint(
+      cand
+        .join(base.select(col("id").as("id_a"), col("sh").as("sh_a"),
+          col("sig").as("sig_a")), "id_a")
+        .join(base.select(col("id").as("id_b"), col("sh").as("sh_b"),
+          col("sig").as("sig_b")), "id_b")
+        .select(col("id_a"), col("id_b"),
+          round(estJaccard(col("sig_a"), col("sig_b"), numHashes), 4)
+            .as("est_jaccard"),
+          round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
+            / size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard"))
+        .filter(col("jaccard") >= threshold),
+      eager = true)
+    GraftSqlShim.unpersistLocalCheckpoint(base)
+    out
   }
 
   /** Per-token 64-bit hashes — hash each token exactly ONCE, then derive

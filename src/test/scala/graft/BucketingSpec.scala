@@ -12,20 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.01"
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bucketing")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark: SparkSession = Engine.session(4, "graft-bucketing",
+    Map("spark.sql.warehouse.dir" -> "/tmp/graft_warehouse"))
 
   test("join of co-bucketed tables plans without any shuffle exchange") {
     // when suites share one JVM, getOrCreate returns the shared session and

@@ -8,17 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtensionsSpec extends AnyFunSuite {
 
   test("extension-injected functions resolve in SQL") {
-    // force a fresh session so withExtensions applies (getOrCreate would
-    // return the shared test session otherwise)
+    // force a fresh session so spark.sql.extensions applies to a new
+    // registry (getOrCreate would return the shared test session otherwise)
     val prior = SparkSession.getActiveSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = Engine.session(cores = 4, appName = "graft-ext")
     try {
       val row = s.sql(
         "SELECT graft_gcd(12, 18) AS g, graft_lcm(4, 6) AS l").head()
