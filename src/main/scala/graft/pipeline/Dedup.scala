@@ -67,14 +67,24 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash + LSH near-duplicate pairs.
-    *
-    * Pipeline: shingle → signature (map-side only) → explode `bands` band
-    * ids → shuffle on (band, hash(band slice)) → self-join inside buckets
-    * → distinct candidate pairs → verify with exact Jaccard on shingle
-    * sets. Returns (id_a, id_b, est_jaccard, jaccard) with jaccard ≥
-    * threshold.
-    */
+  /** Pigeonhole chunks of `sigBits`-bit signature longs as band keys:
+    * `perSig` chunks of `width` bits per long, the last chunk of each
+    * long taking the remaining bits. */
+  private def chunks(sigs: Seq[Column], perSig: Int, width: Int,
+      sigBits: Int): Column =
+    array((for ((s, j) <- sigs.zipWithIndex; c <- 0 until perSig) yield {
+      val w = if (c == perSig - 1) sigBits - c * width else width
+      shiftright(s, c * width).bitwiseAND(lit((1L << w) - 1))
+    }): _*)
+
+  private def hamming(cols: String*): Column =
+    cols.map(c => bit_count(col(s"${c}_a").bitwiseXOR(col(s"${c}_b"))))
+      .reduce(_ + _).cast("long")
+
+  /** MinHash + LSH near-duplicate pairs: shingle → `numHashes`-wide
+    * signature → `bands` bands of `numHashes / bands` positions, keyed
+    * by xxhash64(band, slice) → verify by exact shingle Jaccard ≥
+    * `threshold`. Returns (id_a, id_b, est_jaccard, jaccard). */
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -82,47 +92,18 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     graft.functions.Sketches.register(df.sparkSession)
     val r = numHashes / bands
-    // materialized once: signatures feed the band explode AND both sides
-    // of the candidate join AND the verify join — without it the
-    // shingling + k-hash work reruns per consumer. Materialize.checkpoint,
-    // not persist (r14): no CacheManager entry that sibling plans could
-    // pick up, and the blocks are released below once the eager output
-    // copy owns the pairs.
-    val base = Materialize.checkpoint(
+    BandJoin.pairs(
       df.select(col(idCol).as("id"),
           shingles(col(textCol), shingleSize).as("sh"))
         .withColumn("sig", minhashSignature(col("sh"), numHashes)),
-      eager = true)
-
-    val banded = base
-      .select(col("id"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .select(col("id"), col("band"),
-        xxhash64(col("band"), slice(col("sig"), col("band") * r + 1, lit(r)))
-          .as("bh"))
-
-    val cand = banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
-
-    val out = Materialize.checkpoint(
-      cand
-        .join(base.select(col("id").as("id_a"), col("sh").as("sh_a"),
-          col("sig").as("sig_a")), "id_a")
-        .join(base.select(col("id").as("id_b"), col("sh").as("sh_b"),
-          col("sig").as("sig_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          round(estJaccard(col("sig_a"), col("sig_b"), numHashes), 4)
-            .as("est_jaccard"),
-          round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-            / size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard"))
-        .filter(col("jaccard") >= threshold),
-      eager = true)
-    GraftSqlShim.unpersistLocalCheckpoint(base)
-    out
+      array((0 until bands).map(b =>
+        xxhash64(lit(b), slice(col("sig"), b * r + 1, r))): _*),
+      Seq(round(estJaccard(col("sig_a"), col("sig_b"), numHashes), 4)
+          .as("est_jaccard"),
+        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
+          / size(array_union(col("sh_a"), col("sh_b"))), 4).as("jaccard")),
+      col("jaccard") >= threshold,
+      fetch = true)
   }
 
   /** Per-token 64-bit hashes — hash each token exactly ONCE, then derive
@@ -194,42 +175,15 @@ object Dedup {
           .otherwise(lit(0L))),
       lit(0L), (acc, b) => acc + b)
 
-  /** SimHash near-dup pairs over the portable 30-bit signature: 4×8-bit
-    * pigeonhole chunks guarantee every pair with hamming ≤ 3 collides on
-    * at least one chunk — identical blocking shape to [[simhashPairs]],
-    * with a signature an external oracle can recompute bit-for-bit. */
+  /** SimHash near-dup pairs over the portable 30-bit signature
+    * (oracle-replayable), blocked on 4×8-bit pigeonhole chunks —
+    * complete for `maxHamming` ≤ 3. Returns (id_a, id_b, hamming). */
   def simhashPairsPortable(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
-    // no persist here (r7 ADVICE: it was never released): both self-join
-    // sides read the same sigs subplan and Spark's ReuseExchange serves
-    // the second side from the first's shuffle output — this is the
-    // verification-path variant, and leaking cached blocks across a
-    // 366-query Verify run costs more than any recompute would.
-    // Signature via the codegen'd PortableSimhash30 kernel (r11): the
-    // interpreted HOF spec below (simhash30FromHashes ∘
-    // tokenHashesPortable) made this query 74 s of the full bench —
-    // equivalence corpus-asserted in PipelineSpec.
-    val sigs = df.select(col(idCol).as("id"),
-        graft.functions.Sketches.portableSimhash30(
-          col(textCol), 2654435761L).as("sig"))
-    val chunked = sigs.select(col("id"), col("sig"),
-        explode(sequence(lit(0), lit(3))).as("chunk"))
-      .select(col("id"), col("sig"),  col("chunk"),
-        expr("shiftright(sig, CAST(chunk * 8 AS INT)) & 255L").as("ck"))
-    chunked.as("l")
-      .join(chunked.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.ck") === col("r.ck") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .distinct()
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
+      maxHamming: Int = 3): DataFrame =
+    BandJoin.pairs(portableSigs(df, col(idCol), textCol, "sig"),
+      chunks(Seq(col("sig")), 4, 8, 30),
+      Seq(hamming("sig").as("hamming")), col("hamming") <= maxHamming)
 
   /** 63-bit SimHash of a space-tokenized text column. */
   def simhash(textColName: String): Column =
@@ -258,130 +212,41 @@ object Dedup {
     }.getOrElse(8)
   }
 
-  /** SimHash near-duplicate pairs: bucket on any equal 16-bit chunk (a pair
-    * within Hamming distance 3 of a 63-bit signature must agree on at least
-    * one of 4 chunks), then filter by exact Hamming distance.
-    *
-    * `sigLongs` defaults to 0 = DERIVE from the corpus size via
-    * [[simhashSigLongs]] (one count pass), so the wide-signature scale
-    * path engages automatically past the ~6.5M-doc bound instead of
-    * being an opt-in (r10 verdict #8); below the bound the historical
-    * narrow 63-bit blocking runs unchanged. Pass an explicit value to
-    * pin either path.
-    *
-    * `n` is the caller-known corpus size for the sizing rule: the
-    * default (-1) spends a full `df.count()` pass just to derive
-    * sigLongs — an extra corpus SCAN per call at 100 TB (r11 verdict
-    * #3 of "What's wrong") — so callers that already know n (or a
-    * good upper bound; the rule only needs the right power of two)
-    * should pass it and skip the count job entirely. Ignored when
-    * sigLongs is pinned explicitly. */
+  /** SimHash near-duplicate pairs over `sigLongs` 63-bit xxhash64
+    * SimHashes: [[simhashPairsWide]] with `sigLongs` from
+    * [[simhashSigLongs]] when 0 (the default). `n` is the caller-known
+    * corpus size for that rule; the default −1 spends a `df.count()`
+    * job. Both are ignored when `sigLongs` is pinned. */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, sigLongs: Int = 0, n: Long = -1L): DataFrame = {
-    val sl =
+      maxHamming: Int = 3, sigLongs: Int = 0, n: Long = -1L): DataFrame =
+    simhashPairsWide(df, idCol, textCol, maxHamming,
       if (sigLongs > 0) sigLongs
-      else simhashSigLongs(if (n >= 0) n else df.count(), maxHamming)
-    // the narrow path's FIXED 4×16-bit chunks only pigeonhole-cover
-    // hamming <= 3; any larger threshold needs chunks = maxHamming+1,
-    // which the wide path derives for ANY sigLongs including 1 — so it
-    // owns every mh > 3 call even when the sizing rule says one long
-    // (r11 review: the old dispatch silently missed hamming-4+ pairs)
-    if (sl > 1 || maxHamming > 3)
-      return simhashPairsWide(df, idCol, textCol, maxHamming, sl)
-    // token hashing once per row; signature via the codegen'd SimHash63
-    // expression (the HOF formulation is 63 interpreted passes — see
-    // SCALE.md). No persist (r11 review — the identical never-released
-    // leak removed from the wide/portable variants): both self-join
-    // sides read the same chunked subplan, ReuseExchange serves the
-    // second side from the first's shuffle output.
-    graft.functions.Sketches.register(df.sparkSession)
-    val sigs = df.select(col(idCol).as("id"), tokenHashes(col(textCol)).as("hs"))
-      .select(col("id"), graft.functions.Sketches.simhash63(col("hs")).as("sig"))
-    val chunked = sigs.select(col("id"), col("sig"),
-        explode(sequence(lit(0), lit(3))).as("chunk"))
-      .select(col("id"), col("sig"), col("chunk"),
-        expr("shiftright(sig, CAST(chunk * 16 AS INT)) & 65535L").as("ck"))
-    chunked.as("l")
-      .join(chunked.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.ck") === col("r.ck") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .distinct()
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
+      else simhashSigLongs(if (n >= 0) n else df.count(), maxHamming))
 
   /** Oracle-replayable twin of [[simhashPairsWide]]: a 60-bit signature
-    * from TWO independent portable 30-bit SimHashes (scramble multipliers
-    * 2654435761 / 2246822519 — xxhash's prime2, also odd, so both spread
-    * the polynomial across the full 30 bits), blocked on 4×15-bit
-    * pigeonhole chunks (2 per signature — any pair within maxHamming ≤ 3
-    * over the concatenated 60 bits collides on ≥ 1 chunk). DuckDB
-    * recomputes both signatures bit-for-bit, so the emitted pair set is
-    * fully value-oracled, blocking included (pipe_dedup_simhash_wide). */
+    * from two independent portable 30-bit SimHashes, blocked on 4×15-bit
+    * pigeonhole chunks — complete for `maxHamming` ≤ 3. Returns
+    * (id_a, id_b, hamming) over both longs. */
   def simhashPairsPortableWide(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 2): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4 pigeonhole chunks cover maxHamming <= 3, got $maxHamming")
-    graft.functions.Sketches.register(df.sparkSession)
-    // both signatures via the codegen'd kernel (r11 — the interpreted
-    // HOF pair made this query 149 s of the full bench; spec equivalence
-    // corpus-asserted in PipelineSpec)
-    val sigs = df.select(col(idCol).as("id"),
-      graft.functions.Sketches.portableSimhash30(
-        col(textCol), 2654435761L).as("sig0"),
-      graft.functions.Sketches.portableSimhash30(
-        col(textCol), 2246822519L).as("sig1"))
-    val chunked = sigs
-      .select(col("id"), col("sig0"), col("sig1"),
-        explode(sequence(lit(0), lit(3))).as("chunk"))
-      .select(col("id"), col("sig0"), col("sig1"), col("chunk"),
-        expr("shiftright(CASE WHEN chunk < 2 THEN sig0 ELSE sig1 END, " +
-          "CAST((chunk % 2) * 15 AS INT)) & 32767L").as("ck"))
-    chunked.as("l")
-      .join(chunked.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.ck") === col("r.ck") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig0").as("s0a"), col("l.sig1").as("s1a"),
-        col("r.sig0").as("s0b"), col("r.sig1").as("s1b"))
-      .distinct()
-      .select(col("id_a"), col("id_b"),
-        (bit_count(col("s0a").bitwiseXOR(col("s0b"))) +
-          bit_count(col("s1a").bitwiseXOR(col("s1b")))).cast("long")
-          .as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    BandJoin.pairs(portableSigs(df, col(idCol), textCol, "sig0", "sig1"),
+      chunks(Seq(col("sig0"), col("sig1")), 2, 15, 30),
+      Seq(hamming("sig0", "sig1").as("hamming")), col("hamming") <= maxHamming)
   }
 
-  /** Wide-signature SimHash near-dup pairs — the >10M-doc variant of
-    * [[simhashPairs]] (SCALE.md "SimHash fixed-bucket caveat"): the
-    * narrow path's 4×2^16 chunk buckets are fixed, so bucket occupancy
-    * — and intra-bucket pair work — grows linearly (candidate volume
-    * quadratically) with the corpus; past ~10M docs the fix is a WIDER
-    * signature, since the chunk COUNT is forced to maxHamming+1 by the
-    * pigeonhole bound and only chunk WIDTH can buy more buckets.
-    *
-    * `sigLongs` independent 63-bit signatures are built from
-    * independently-seeded token hashes (xxhash64(token, j) — each token
-    * still hashed once per seed, map-side) and concatenated into a
-    * 63·sigLongs-bit signature. Pigeonhole blocking chops EACH long into
-    * ceil((maxHamming+1)/sigLongs) pieces — ≥ maxHamming+1 chunks
-    * total, so any pair within `maxHamming` over the concatenated
-    * signature still collides on at least one chunk — and chunk width
-    * rises from 16 to ~31 bits at sigLongs=2: bucket space grows from
-    * 4×2^16 to 4×2^31, holding bucket sizes sane to ~10^12 docs.
-    *
-    * Semantics knob: hamming ≤ maxHamming over MORE bits is a stricter
-    * similarity statement (3/126 ≈ cosine of the 63-bit threshold at
-    * 1.5/63), so callers widening the signature at fixed maxHamming get
-    * higher precision / lower recall; scale maxHamming ∝ sigLongs to
-    * keep the similarity threshold (PipeScale exercises sigLongs=2 at
-    * both maxHamming=3 and the threshold-preserving 6). */
+  /** SimHash near-dup pairs over a 63·`sigLongs`-bit signature: long j
+    * is the SimHash of the tokens hashed with xxhash64(token, j), and
+    * each long is cut into ceil((maxHamming + 1) / sigLongs) pigeonhole
+    * chunks, so any pair within `maxHamming` over the whole signature
+    * collides on a chunk. Widening the signature widens the chunks
+    * (more buckets; SCALE.md "Dedup — SimHash"); at a fixed
+    * `maxHamming` it also tightens the similarity threshold — scale
+    * `maxHamming` with `sigLongs` to keep it. Returns (id_a, id_b,
+    * hamming). */
   def simhashPairsWide(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, sigLongs: Int = 2): DataFrame = {
@@ -389,45 +254,16 @@ object Dedup {
       s"sigLongs must be in 1..8, got $sigLongs")
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
     graft.functions.Sketches.register(df.sparkSession)
-    // one signature per seed; each long is an independent 63-bit SimHash
-    val sigArr = array((0 until sigLongs).map { j =>
-      graft.functions.Sketches.simhash63(
-        transform(split(col(textCol), " "), t => xxhash64(t, lit(j))))
-    }: _*)
-    // no persist (r10 ADVICE — it was never released, the exact leak the
-    // r7 note in simhashPairsPortable removed): both self-join sides read
-    // the same chunked subplan, so ReuseExchange serves the second side
-    // from the first's shuffle output and signatures compute once
-    val sigs = df.select(col(idCol).as("id"), sigArr.as("sig"))
+    val names = (0 until sigLongs).map(j => s"sig$j")
     val chunksPerLong =
       math.max(1, math.ceil((maxHamming + 1).toDouble / sigLongs).toInt)
-    val width = 63 / chunksPerLong
-    // chunk c of long j covers bits [c*width, ...); the LAST chunk of
-    // each long takes the 63 - (chunksPerLong-1)*width remainder bits —
-    // chunks partition all 63*sigLongs bits, so the pigeonhole holds
-    val pieces = for (j <- 0 until sigLongs; c <- 0 until chunksPerLong)
-      yield {
-        val w = if (c == chunksPerLong - 1) 63 - c * width else width
-        struct(lit(j * chunksPerLong + c).as("chunk"),
-          expr(s"shiftright(element_at(sig, ${j + 1}), ${c * width}) & " +
-            s"${(1L << w) - 1}L").as("ck"))
-      }
-    val chunked = sigs
-      .select(col("id"), col("sig"), explode(array(pieces: _*)).as("p"))
-      .select(col("id"), col("sig"),
-        col("p.chunk").as("chunk"), col("p.ck").as("ck"))
-    chunked.as("l")
-      .join(chunked.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.ck") === col("r.ck") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b"))
-      .distinct()
-      .select(col("id_a"), col("id_b"),
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-          lit(0L), (acc, x) => acc + x).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    BandJoin.pairs(
+      df.select(col(idCol).as("id") +: names.zipWithIndex.map { case (s, j) =>
+        graft.functions.Sketches.simhash63(
+          transform(split(col(textCol), " "), t => xxhash64(t, lit(j)))).as(s)
+      }: _*),
+      chunks(names.map(col), chunksPerLong, 63 / chunksPerLong, 63),
+      Seq(hamming(names: _*).as("hamming")), col("hamming") <= maxHamming)
   }
 
   /** Embedding-cosine near-duplicate dedup: a row is DROPPED when any
@@ -681,108 +517,51 @@ object Dedup {
     * replayable). Write this once per batch; union/append is the only
     * store maintenance. */
   def simhashStorePortable(
-      df: DataFrame, idCol: String, textCol: String): DataFrame = {
+      df: DataFrame, idCol: String, textCol: String): DataFrame =
+    portableSigs(df, col(idCol).cast("long"), textCol, "sig")
+
+  /** `id` plus one portable 30-bit SimHash per name: the first under
+    * the scramble multiplier 2654435761, the second under 2246822519
+    * (xxhash's prime2; both odd, so both spread the polynomial across
+    * all 30 bits). */
+  private def portableSigs(df: DataFrame, id: Column, textCol: String,
+      names: String*): DataFrame = {
     graft.functions.Sketches.register(df.sparkSession)
-    df.select(col(idCol).cast("long").as("id"),
-      graft.functions.Sketches.portableSimhash30(
-        col(textCol), 2654435761L).as("sig"))
+    df.select(id.as("id") +: names.zip(Seq(2654435761L, 2246822519L)).map {
+      case (n, m) =>
+        graft.functions.Sketches.portableSimhash30(col(textCol), m).as(n)
+    }: _*)
   }
 
-  /** An empty signature store (first snapshot bootstrap). */
-  def emptySigStore(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+  /** An empty signature store (first snapshot bootstrap): `id` plus
+    * one BIGINT per signature column — `Seq("sig0", "sig1")` for the
+    * wide and auto stores. */
+  def emptySigStore(spark: org.apache.spark.sql.SparkSession,
+      sigCols: Seq[String] = Seq("sig")): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id", LongType), StructField("sig", LongType))))
+      StructType(("id" +: sigCols).map(StructField(_, LongType))))
   }
 
-  /** Dedup a new batch against a persisted signature store.
-    *
-    * A batch doc is a duplicate iff some store signature OR some
-    * smaller-id batch signature lies within `maxHamming` of its own
-    * portable 30-bit SimHash. Blocking is the 4×8-bit pigeonhole of
-    * [[simhashPairsPortable]] (complete for maxHamming ≤ 3, so blocking
-    * is an implementation detail, not a semantics change); the store
-    * side additionally passes a Bloom prefilter built from the BATCH's
-    * chunk keys — the batch is the small side, so the sketch is a
-    * driver scalar (the contaminationReportBloom pattern) probed
-    * MAP-SIDE on the store scan: only store rows whose chunk key might
-    * collide ever shuffle, and what shuffles is (id, sig, chunk, ck) —
-    * 4 rows of 4 longs per surviving signature, never text. Exactness:
-    * the hamming filter after the join kills every Bloom/bucket false
-    * positive, so the result is bit-identical with the prefilter on or
-    * off (PipelineSpec asserts it).
-    *
-    * Returns one row per batch doc: (doc_id, sig, is_dup, dup_src)
-    * where dup_src is the SMALLEST matching id (store ∪ earlier batch),
-    * null for keepers. Append `.select(col("doc_id").as("id"),
-    * col("sig"))` back to the store to process the next snapshot. */
+  /** Dedup a new batch against a persisted signature store: a batch doc
+    * is a duplicate iff some store signature or some smaller-id batch
+    * signature lies within `maxHamming` (0..3) of its portable 30-bit
+    * SimHash, blocked on the 4×8-bit chunks of [[simhashPairsPortable]].
+    * `useBloom` prefilters the store scan (exactness-neutral);
+    * `persistSigs` checkpoints the batch signatures. Returns (doc_id,
+    * sig, is_dup, dup_src), dup_src = smallest matching id, null for
+    * keepers; append `.select(col("doc_id").as("id"), col("sig"))` to
+    * the store for the next snapshot. */
   def incrementalDedupSimhash(
       storeSigs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       maxHamming: Int = 1, useBloom: Boolean = true,
-      bloomBits: Int = 1 << 17, bloomHashes: Int = 5,
       persistSigs: Boolean = true): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"portable pigeonhole blocking covers maxHamming 0..3, got $maxHamming")
-    graft.functions.Sketches.register(batch.sparkSession)
-    graft.functions.Bloom.register(batch.sparkSession)
-    def chunked(sigs: DataFrame): DataFrame =
-      sigs.select(col("id"), col("sig"),
-          explode(sequence(lit(0), lit(3))).as("chunk"))
-        .select(col("id"), col("sig"), col("chunk"),
-          expr("shiftright(sig, CAST(chunk * 8 AS INT)) & 255L").as("ck"))
-    // combined bucket key: chunk index in the high bits, 8-bit chunk
-    // value in the low — one long per (chunk, ck)
-    def key(c: Column, k: Column): Column = c.cast("long") * 256L + k
-    // batch signatures materialize by default: read by the sketch-build
-    // action, both self-join sides, and the final attribution join.
-    // localCheckpoint, NOT persist (r14 ADVICE): a persist() registered
-    // here was never unpersisted — the exact never-released cache-entry
-    // leak the r7/r10/r11 reviews removed from the pair operators — and
-    // per the CacheManager gotcha the cached signature subplan could be
-    // silently substituted into sibling plans sharing the shape.
-    // localCheckpoint materializes eagerly without touching the cache
-    // registry and its blocks die with the job (at 100 TB: checkpoint
-    // the batch sigs to storage). persistSigs=false for REPEATED
-    // callers that prefer the recompute (one extra signature pass).
-    val bs0 = simhashStorePortable(batch, idCol, textCol)
-    val bs = if (persistSigs) Materialize.checkpoint(bs0) else bs0
-    val bc = chunked(bs)
-    val sc0 = chunked(storeSigs.select(col("id").cast("long").as("id"),
-      col("sig")))
-    val sc =
-      if (!useBloom) sc0
-      else {
-        // the batch is the SMALL side: its distinct chunk keys fit a
-        // driver-scalar Bloom sketch (2^17 bits ≈ 16 KB default; the
-        // key domain of the narrow path is 4·2^8, so the sketch is
-        // effectively exact — the knob matters for the wide variants)
-        val sketch = bc.select(key(col("chunk"), col("ck")).as("k"))
-          .distinct()
-          .agg(graft.functions.Bloom.sketch(col("k"), bloomBits,
-            bloomHashes))
-          .head().getAs[Array[Byte]](0)
-        sc0.filter(graft.functions.Bloom.contains(lit(sketch),
-          key(col("chunk"), col("ck"))))
-      }
-    // store matches: ANY store id disqualifies a batch doc
-    val storeMatches = bc.as("b").join(sc.as("s"),
-        col("b.chunk") === col("s.chunk") && col("b.ck") === col("s.ck"))
-      .select(col("b.id").as("id"), col("b.sig").as("sig"),
-        col("s.id").as("src"), col("s.sig").as("ssig"))
-    // within-batch matches: only EARLIER (smaller-id) batch docs do
-    val batchMatches = bc.as("l").join(bc.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.ck") === col("r.ck") &&
-          col("r.id") < col("l.id"))
-      .select(col("l.id").as("id"), col("l.sig").as("sig"),
-        col("r.id").as("src"), col("r.sig").as("ssig"))
-    val dupSrc = storeMatches.union(batchMatches)
-      .distinct() // multi-chunk collisions of the same (id, src) pair
-      .filter(bit_count(col("sig").bitwiseXOR(col("ssig"))) <= maxHamming)
-      .groupBy(col("id")).agg(min(col("src")).as("dup_src"))
-    bs.join(dupSrc, Seq("id"), "left")
-      .select(col("id").as("doc_id"), col("sig"),
-        col("dup_src").isNotNull.as("is_dup"), col("dup_src"))
+    BandJoin.store(storeSigs, simhashStorePortable(batch, idCol, textCol),
+      chunks(Seq(col("sig")), 4, 8, 30), hamming("sig") <= maxHamming,
+      useBloom, persistSigs)
   }
 
   // ── incremental dedup against a persisted MinHash-LSH store (r14) ───
@@ -851,96 +630,37 @@ object Dedup {
         lit("")), portableMinhashParams(k, shingleSize)).as("sig"))
   }
 
-  /** Dedup a new batch against a persisted MinHash signature store.
-    *
-    * A batch doc is a duplicate iff some store signature (any id) or
-    * some smaller-id batch signature matches it: at least one of the
-    * `bands` r-position signature slices is IDENTICAL (the LSH banding
-    * rule, r = k/bands) and at least `minAgree` of all k positions
-    * agree (integer est-Jaccard threshold minAgree/k). Blocking ships
-    * (id, sig, band, band-slice) rows — 4 rows of ~(2+r) longs per
-    * signature, never text — and joins on (band, bandHash) with the
-    * exact slice equality verified as a residual, so the band hash is
-    * pure shuffle-key compression, not semantics. The store side
-    * passes the batch-keyed Bloom prefilter MAP-SIDE on the store scan
-    * (the [[incrementalDedupSimhash]] pattern): only store rows whose
-    * band key might collide ever shuffle, and the slice/agree verify
-    * makes the prefilter exactness-neutral (PipelineSpec asserts
-    * bit-identity on/off).
-    *
-    * Returns one row per batch doc: (doc_id, sig, is_dup, dup_src),
-    * dup_src = smallest matching id (store ∪ earlier batch), null for
-    * keepers. Append `.select(col("doc_id").as("id"), col("sig"))` to
-    * the store to process the next snapshot — the store keeps every
-    * signature SEEN (kept or dropped), which is what makes
-    * incremental(A then B) ≡ batch(A ∪ B) under the smaller-id rule.
-    *
-    * Scale: band buckets are value-continuous (~2^30 distinct slice
-    * hashes per band), so unlike the fixed 4×2^8 narrow SimHash chunks
-    * there is no bucket-crowding knee from the key SPACE — crowding
-    * tracks true near-dup density (IncrementalAb measures the store
-    * scaling alongside the SimHash variants). */
+  /** Dedup a new batch against a persisted MinHash signature store
+    * (rows of [[minhashSigStore]] with the same `k`, `shingleSize`): a
+    * batch doc is a duplicate iff some store or smaller-id batch
+    * signature has an IDENTICAL slice in one of the `bands` bands of
+    * k / bands positions and agrees on at least `minAgree` of all k
+    * positions (integer est-Jaccard ≥ minAgree/k). The band key is a
+    * polynomial fold of the slice, so the join carries the slice itself
+    * as an exact residual. `useBloom` and `persistSigs` as for
+    * [[incrementalDedupSimhash]]. Returns (doc_id, sig, is_dup,
+    * dup_src). */
   def incrementalDedupMinhash(
       storeSigs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       k: Int = 16, shingleSize: Int = 3, bands: Int = 4, minAgree: Int = 8,
-      useBloom: Boolean = true,
-      bloomBits: Int = 1 << 21, bloomHashes: Int = 5,
-      persistSigs: Boolean = true): DataFrame = {
+      useBloom: Boolean = true, persistSigs: Boolean = true): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     require(minAgree >= 0 && minAgree <= k,
       s"minAgree must be in 0..$k, got $minAgree")
     val r = k / bands
-    graft.functions.Sketches.register(batch.sparkSession)
-    graft.functions.Bloom.register(batch.sparkSession)
-    // band rows: slice + a polynomial fold of the slice as the scalar
-    // shuffle key (slice values < 2^30, so acc*31 + v stays < 2^35)
-    def banded(sigs: DataFrame): DataFrame =
-      sigs.select(col("id"), col("sig"),
-          explode(sequence(lit(0), lit(bands - 1))).as("band"))
-        .withColumn("bs", slice(col("sig"), col("band") * r + 1, lit(r)))
-        .withColumn("bh", aggregate(col("bs"), lit(0L),
-          (acc, v) => pmod(acc * 31 + v, lit(1000000007L))))
-    def key(b: Column, h: Column): Column =
-      b.cast("long") * 1000000007L + h
-    val agree = (a: Column, b: Column) =>
-      aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, x) => acc + x)
-    // same localCheckpoint rationale + repeated-caller escape as the
-    // SimHash store ops (r14: never persist() inside a lazy operator)
-    val bs0 = minhashSigStore(batch, idCol, textCol, k, shingleSize)
-    val bsig = if (persistSigs) Materialize.checkpoint(bs0) else bs0
-    val bc = banded(bsig)
-    val sc0 = banded(storeSigs.select(col("id").cast("long").as("id"),
-      col("sig")))
-    val sc =
-      if (!useBloom) sc0
-      else {
-        val sketch = bc.select(key(col("band"), col("bh")).as("k"))
-          .distinct()
-          .agg(graft.functions.Bloom.sketch(col("k"), bloomBits,
-            bloomHashes))
-          .head().getAs[Array[Byte]](0)
-        sc0.filter(graft.functions.Bloom.contains(lit(sketch),
-          key(col("band"), col("bh"))))
-      }
-    val storeMatches = bc.as("b").join(sc.as("s"),
-        col("b.band") === col("s.band") && col("b.bh") === col("s.bh") &&
-          col("b.bs") === col("s.bs"))
-      .select(col("b.id").as("id"), col("b.sig").as("sig"),
-        col("s.id").as("src"), col("s.sig").as("ssig"))
-    val batchMatches = bc.as("l").join(bc.as("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.bs") === col("r.bs") && col("r.id") < col("l.id"))
-      .select(col("l.id").as("id"), col("l.sig").as("sig"),
-        col("r.id").as("src"), col("r.sig").as("ssig"))
-    val dupSrc = storeMatches.union(batchMatches)
-      .distinct() // multi-band collisions of the same (id, src) pair
-      .filter(agree(col("sig"), col("ssig")) >= minAgree)
-      .groupBy(col("id")).agg(min(col("src")).as("dup_src"))
-    bsig.join(dupSrc, Seq("id"), "left")
-      .select(col("id").as("doc_id"), col("sig"),
-        col("dup_src").isNotNull.as("is_dup"), col("dup_src"))
+    // slice values < 2^30, so acc*31 + v stays < 2^35
+    val sliceBands = array((0 until bands).map { b =>
+      val s = slice(col("sig"), b * r + 1, r)
+      struct(aggregate(s, lit(0L),
+          (acc, v) => pmod(acc * 31 + v, lit(1000000007L))).as("key"),
+        s.as("slice"))
+    }: _*)
+    val agree = aggregate(zip_with(col("sig_a"), col("sig_b"),
+      (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
+    BandJoin.store(storeSigs,
+      minhashSigStore(batch, idCol, textCol, k, shingleSize),
+      sliceBands, agree >= minAgree, useBloom, persistSigs)
   }
 
   /** Wide-signature store rows: (id, sig0, sig1) — two independent
@@ -949,164 +669,203 @@ object Dedup {
     * path's bucket headroom: chunks widen 8 → 15 bits, bucket space
     * 4·2^8 → 4·2^15, the same widening lever as simhashPairsWide. */
   def simhashStorePortableWide(
-      df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
-    df.select(col(idCol).cast("long").as("id"),
-      graft.functions.Sketches.portableSimhash30(
-        col(textCol), 2654435761L).as("sig0"),
-      graft.functions.Sketches.portableSimhash30(
-        col(textCol), 2246822519L).as("sig1"))
-  }
+      df: DataFrame, idCol: String, textCol: String): DataFrame =
+    portableSigs(df, col(idCol).cast("long"), textCol, "sig0", "sig1")
 
-  /** [[incrementalDedupSimhash]] over the WIDE 60-bit portable
-    * signature — same store-OR-earlier semantics, hamming measured
-    * over both signature longs, blocking on 4×15-bit pigeonhole
-    * chunks (2 per long; complete for maxHamming ≤ 3). This is the
-    * store variant for corpora where 8-bit chunks crowd (SCALE.md —
-    * the bucket-space lever is chunk WIDTH); the default maxHamming=2
-    * preserves the wide pair query's 1-in-30 relative threshold.
-    * Returns (doc_id, sig0, sig1, is_dup, dup_src). */
+  /** [[incrementalDedupSimhash]] over the wide 60-bit portable
+    * signature of [[simhashStorePortableWide]]: hamming over both longs
+    * within `maxHamming` (0..3), 4×15-bit pigeonhole chunks. Returns
+    * (doc_id, sig0, sig1, is_dup, dup_src). */
   def incrementalDedupSimhashWide(
       storeSigs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       maxHamming: Int = 2, useBloom: Boolean = true,
-      bloomBits: Int = 1 << 21, bloomHashes: Int = 5,
       persistSigs: Boolean = true): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4-chunk pigeonhole blocking covers maxHamming 0..3, got $maxHamming")
-    incrementalDedupWideSchemaCore(storeSigs, batch, idCol, textCol,
-      // chunk c∈0..3: low/high 15 bits of sig0 (c=0,1), of sig1 (c=2,3)
-      ckSql = "shiftright(IF(chunk < 2, sig0, sig1), " +
-        "CAST((chunk % 2) * 15 AS INT)) & 32767L",
-      keyStride = 32768L,
-      dupCond = (bit_count(col("sig0").bitwiseXOR(col("ssig0"))) +
-        bit_count(col("sig1").bitwiseXOR(col("ssig1")))) <= maxHamming,
-      useBloom, bloomBits, bloomHashes, persistSigs)
+    BandJoin.store(storeSigs, simhashStorePortableWide(batch, idCol, textCol),
+      chunks(Seq(col("sig0"), col("sig1")), 2, 15, 30),
+      hamming("sig0", "sig1") <= maxHamming, useBloom, persistSigs)
   }
 
-  /** Shared machinery for every wide-schema (id, sig0, sig1) store
-    * variant: `ckSql` derives the pigeonhole chunk key from
-    * (sig0, sig1, chunk), `keyStride` packs (chunk, ck) into the one
-    * Bloom key long, `dupCond` is the exact hamming predicate over
-    * (sig0, sig1, ssig0, ssig1) that makes the blocking + Bloom
-    * exactness-neutral. Extracted (r14) so the auto-dispatch router
-    * can run NARROW blocking (4×8-bit chunks of sig0 only) over the
-    * stable wide schema without duplicating the join/Bloom shape. */
-  private def incrementalDedupWideSchemaCore(
-      storeSigs: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String,
-      ckSql: String, keyStride: Long, dupCond: Column,
-      useBloom: Boolean, bloomBits: Int, bloomHashes: Int,
-      persistSigs: Boolean): DataFrame = {
-    graft.functions.Sketches.register(batch.sparkSession)
-    graft.functions.Bloom.register(batch.sparkSession)
-    def chunked(sigs: DataFrame): DataFrame =
-      sigs.select(col("id"), col("sig0"), col("sig1"),
-          explode(sequence(lit(0), lit(3))).as("chunk"))
-        .select(col("id"), col("sig0"), col("sig1"), col("chunk"),
-          expr(ckSql).as("ck"))
-    def key(c: Column, k: Column): Column = c.cast("long") * keyStride + k
-    // same localCheckpoint rationale + repeated-caller escape as the
-    // narrow path (r14 ADVICE: persist() here leaked its cache entry)
-    val bs0 = simhashStorePortableWide(batch, idCol, textCol)
-    val bs = if (persistSigs) Materialize.checkpoint(bs0) else bs0
-    val bc = chunked(bs)
-    val sc0 = chunked(storeSigs.select(col("id").cast("long").as("id"),
-      col("sig0"), col("sig1")))
-    val sc =
-      if (!useBloom) sc0
-      else {
-        val sketch = bc.select(key(col("chunk"), col("ck")).as("k"))
-          .distinct()
-          .agg(graft.functions.Bloom.sketch(col("k"), bloomBits,
-            bloomHashes))
-          .head().getAs[Array[Byte]](0)
-        sc0.filter(graft.functions.Bloom.contains(lit(sketch),
-          key(col("chunk"), col("ck"))))
-      }
-    val storeMatches = bc.as("b").join(sc.as("s"),
-        col("b.chunk") === col("s.chunk") && col("b.ck") === col("s.ck"))
-      .select(col("b.id").as("id"), col("b.sig0").as("sig0"),
-        col("b.sig1").as("sig1"),
-        col("s.id").as("src"), col("s.sig0").as("ssig0"),
-        col("s.sig1").as("ssig1"))
-    val batchMatches = bc.as("l").join(bc.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.ck") === col("r.ck") &&
-          col("r.id") < col("l.id"))
-      .select(col("l.id").as("id"), col("l.sig0").as("sig0"),
-        col("l.sig1").as("sig1"),
-        col("r.id").as("src"), col("r.sig0").as("ssig0"),
-        col("r.sig1").as("ssig1"))
-    val dupSrc = storeMatches.union(batchMatches)
-      .distinct()
-      .filter(dupCond)
-      .groupBy(col("id")).agg(min(col("src")).as("dup_src"))
-    bs.join(dupSrc, Seq("id"), "left")
-      .select(col("id").as("doc_id"), col("sig0"), col("sig1"),
-        col("dup_src").isNotNull.as("is_dup"), col("dup_src"))
-  }
-
-  /** An empty WIDE-schema signature store (auto/wide bootstrap). */
-  def emptyWideSigStore(spark: org.apache.spark.sql.SparkSession)
-      : DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("id", LongType),
-        StructField("sig0", LongType), StructField("sig1", LongType))))
-  }
-
-  /** The measured narrow-path headroom: IncrementalAb (r13, SCALE.md)
-    * read the narrow 4×2^8 blocking superlinear past ~50k store
-    * signatures — exactly the sizing rule's occupancy bound of ~200
-    * signatures per bucket across 256 buckets per chunk (each sig
-    * lands once in each of the 4 chunks, so occupancy = n/256). */
+  /** The measured narrow-path headroom (SCALE.md): the narrow 4×2^8
+    * blocking turns superlinear past ~50k store signatures — about 200
+    * signatures per bucket across the 256 buckets of each chunk. */
   val incrementalStoreNarrowMax: Long = 200L * 256
 
-  /** Knee-aware incremental SimHash dedup over the STABLE wide store
-    * schema (id, sig0, sig1): below `narrowMax` store signatures the
-    * decision rule is the narrow operator's — 4×8-bit pigeonhole
-    * chunks of sig0, hamming(sig0) ≤ maxHamming — and past it the wide
-    * operator's — 4×15-bit chunks over both longs, hamming(sig0‖sig1)
-    * ≤ 2·maxHamming, the threshold-preserving rate map (1-in-30 →
-    * 2-in-60). The router exists because the narrow path silently
-    * degrades past its measured knee (r13 verdict #2: a long-running
-    * caller crosses ~50k signatures unattended and inherits the
-    * superlinear bucket crowding IncrementalAb measured at 99 s/×50
-    * vs wide's 10.4 s); like [[simhashPairs]]'s sigLongs rule, the
-    * dispatch trades the recall threshold for bounded bucket work,
-    * and the semantics switch is the documented knob, not a surprise.
-    *
-    * `n` is the caller-known store size (a parquet-metadata count for
-    * a stored store); the default -1 spends a `storeSigs.count()` job.
-    * Output schema is the wide report (doc_id, sig0, sig1, is_dup,
-    * dup_src) in BOTH modes, so stores and sinks never change shape
-    * across the knee — in narrow mode sig1 is carried, not consulted.
-    * Below the knee the (is_dup, dup_src) columns are bit-identical to
-    * [[incrementalDedupSimhash]] on sig0 (spec-asserted). */
+  /** Knee-aware incremental SimHash dedup over the stable wide store
+    * schema (id, sig0, sig1). Up to `narrowMax` store signatures it
+    * applies the narrow rule — 4×8-bit chunks of sig0, hamming(sig0) ≤
+    * `maxHamming` (0..1) — and past it the wide rule of
+    * [[incrementalDedupSimhashWide]] at 2·`maxHamming`, the same
+    * relative threshold over 60 bits. `n` is the caller-known store
+    * size; the default −1 spends a `storeSigs.count()` job. The report
+    * is (doc_id, sig0, sig1, is_dup, dup_src) in both modes; below the
+    * knee its decision equals [[incrementalDedupSimhash]] on sig0. */
   def incrementalDedupSimhashAuto(
       storeSigs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       maxHamming: Int = 1, n: Long = -1L,
       narrowMax: Long = incrementalStoreNarrowMax,
       useBloom: Boolean = true, persistSigs: Boolean = true): DataFrame = {
-    // the wide mode runs at 2·maxHamming, and ITS 4-chunk pigeonhole
-    // only covers hamming ≤ 3 — so the router's narrow-scale knob is
-    // 0..1 (the store family's default threshold; a caller needing
-    // hamming 2..3 pins a variant explicitly and owns the knee)
+    // the wide mode runs at 2·maxHamming, and its 4-chunk pigeonhole
+    // only covers hamming ≤ 3
     require(maxHamming >= 0 && maxHamming <= 1,
       s"auto dispatch covers maxHamming 0..1, got $maxHamming")
     val size = if (n >= 0L) n else storeSigs.count()
     if (size <= narrowMax)
-      incrementalDedupWideSchemaCore(storeSigs, batch, idCol, textCol,
-        ckSql = "shiftright(sig0, CAST(chunk * 8 AS INT)) & 255L",
-        keyStride = 256L,
-        dupCond =
-          bit_count(col("sig0").bitwiseXOR(col("ssig0"))) <= maxHamming,
-        useBloom, bloomBits = 1 << 17, bloomHashes = 5, persistSigs)
+      BandJoin.store(storeSigs, simhashStorePortableWide(batch, idCol, textCol),
+        chunks(Seq(col("sig0")), 4, 8, 30), hamming("sig0") <= maxHamming,
+        useBloom, persistSigs)
     else
       incrementalDedupSimhashWide(storeSigs, batch, idCol, textCol,
-        maxHamming = 2 * maxHamming, useBloom = useBloom,
-        persistSigs = persistSigs)
+        2 * maxHamming, useBloom, persistSigs)
   }
+}
+
+/** Filter-and-verify band join: the one core behind every pair and
+  * store dedup operator in [[Dedup]] and [[Similarity.lshNearPairs]].
+  *
+  * Inputs are signature rows `(id, sig…)`, a `bands` column — the
+  * row's band keys as an array, element i the key of band i — and a
+  * verify rule over the suffixed sides (`c_a` for the left or batch
+  * row, `c_b` for the right or matched row, for every column `c`). A
+  * key is a long (a chunk value, a slice hash) or a struct whose
+  * fields all join, so a struct can add an exact residual to a hashed
+  * key (the MinHash store's slice). Rows meet in an equi-join on the
+  * band index and every key field. Only `(id, band, key…)` rows and a
+  * carried signature ever shuffle — never text.
+  *
+  * Two modes:
+  *  - [[pairs]]: self-join with `l.id < r.id`, `distinct` (a pair
+  *    colliding in several bands is one candidate), verify;
+  *  - [[store]]: batch × store plus the batch self-join on
+  *    `r.id < l.id`, `distinct`, verify, `min(src)` per batch id, and a
+  *    left join back: `(doc_id, sig…, is_dup, dup_src)`.
+  *
+  * Completeness. Pigeonhole (SimHash): a signature cut into m disjoint
+  * chunks, two signatures within hamming h ≤ m − 1 leave at least one
+  * chunk untouched, so every such pair shares a `(band, key)` and the
+  * blocking finds all of them; the verify makes the result exact.
+  * Banding (MinHash, hyperplane LSH): a pair is a candidate iff some
+  * band (an r-position slice) agrees — P = 1 − (1 − s^r)^b at
+  * per-position agreement s — so recall is the banding S-curve and
+  * precision is exact; where the rule itself demands a band match (the
+  * MinHash store) the join is complete by construction.
+  *
+  * The store side's Bloom prefilter holds every batch band key. A Bloom
+  * filter has no false negatives, so every store row that could join a
+  * batch row passes; a false positive only lets through a row the
+  * equi-join then drops. The join output, and everything after it, is
+  * the same with the prefilter on or off: it is exactness-neutral. The
+  * sketch is a driver scalar probed map-side on the store scan, so only
+  * store rows whose key might collide shuffle. */
+private[pipeline] object BandJoin {
+  // 64 KB sketch: ~10 bits per key (fp ≈ 1%) up to ~50k distinct batch
+  // band keys. A bigger sketch costs every call a bigger plan literal; a
+  // fuller one only lets more store rows shuffle, never changes a result.
+  private val BloomBits = 1 << 19
+  private val BloomHashes = 5
+
+  /** Pairs mode: `(id_a, id_b, score…)` with `id_a < id_b`, kept where
+    * `keep` (over the score columns) holds. `fetch = false` carries the
+    * signature through the join (small fixed-width SimHash signatures);
+    * `fetch = true` joins only ids, and after `distinct` fetches the
+    * payload by id from an eager checkpoint of `sigs` — the result is
+    * itself an eager checkpoint, and the signature blocks are released
+    * once it owns the pairs. `spreadVerify` repartitions the fetched
+    * candidates to the default parallelism before scoring: candidate
+    * rows are small in bytes, so AQE would otherwise coalesce a
+    * CPU-bound verify into a few partitions. */
+  def pairs(
+      sigs: DataFrame, bands: Column, score: Seq[Column], keep: Column,
+      fetch: Boolean = false, spreadVerify: Boolean = false): DataFrame = {
+    val payload = sigs.columns.toSeq.filter(_ != "id")
+    val base = if (fetch) Materialize.checkpoint(sigs) else sigs
+    val carry = if (fetch) Nil else payload
+    val (r, keys) = rows(base, carry, bands)
+    val cand = r.as("l")
+      .join(r.as("r"), on(keys) && col("l.id") < col("r.id"))
+      .select(side("l", "_a", carry) ++ side("r", "_b", carry): _*)
+      .distinct()
+    def verify(c: DataFrame): DataFrame =
+      c.select(col("id_a") +: col("id_b") +: score: _*).filter(keep)
+    if (!fetch) verify(cand)
+    else {
+      def payloadAs(s: String): DataFrame = base.select(
+        col("id").as("id" + s) +: payload.map(c => col(c).as(c + s)): _*)
+      val joined = cand.join(payloadAs("_a"), "id_a")
+        .join(payloadAs("_b"), "id_b")
+      val spread =
+        if (!spreadVerify) joined
+        else joined.repartition(
+          sigs.sparkSession.sparkContext.defaultParallelism,
+          col("id_a"), col("id_b"))
+      val out = Materialize.checkpoint(verify(spread))
+      GraftSqlShim.unpersistLocalCheckpoint(base)
+      out
+    }
+  }
+
+  /** Store mode: dedup the `batch` signature rows against `storeSigs` rows
+    * (same schema). A batch doc is a duplicate iff `keep` holds for
+    * some band-colliding store row (any id) or smaller-id batch row;
+    * `dup_src` is the smallest such id. The signature carries through
+    * the join. `persistSigs` checkpoints the batch signatures (read by
+    * the sketch, both self-join sides and the report join); repeated
+    * callers such as a streaming sink pass false and recompute. */
+  def store(
+      storeSigs: DataFrame, batch: DataFrame, bands: Column, keep: Column,
+      useBloom: Boolean, persistSigs: Boolean): DataFrame = {
+    graft.functions.Bloom.register(batch.sparkSession)
+    val payload = batch.columns.toSeq.filter(_ != "id")
+    val bs = if (persistSigs) Materialize.checkpoint(batch) else batch
+    val (bc, keys) = rows(bs, payload, bands)
+    val (sc0, _) = rows(
+      storeSigs.select(col("id").cast("long").as("id") +: payload.map(col): _*),
+      payload, bands)
+    val sc =
+      if (!useBloom) sc0
+      else {
+        val bloomKey = xxhash64(keys.map(col): _*)
+        val sketch = bc.select(bloomKey.as("k")).distinct()
+          .agg(graft.functions.Bloom.sketch(col("k"), BloomBits, BloomHashes))
+          .head().getAs[Array[Byte]](0)
+        sc0.filter(graft.functions.Bloom.contains(lit(sketch), bloomKey))
+      }
+    val sides = side("l", "_a", payload) ++ side("r", "_b", payload)
+    val storeMatches = bc.as("l").join(sc.as("r"), on(keys)).select(sides: _*)
+    val batchMatches = bc.as("l")
+      .join(bc.as("r"), on(keys) && col("r.id") < col("l.id"))
+      .select(sides: _*)
+    val dupSrc = storeMatches.union(batchMatches)
+      .distinct()
+      .filter(keep)
+      .groupBy(col("id_a").as("id")).agg(min(col("id_b")).as("dup_src"))
+    bs.join(dupSrc, Seq("id"), "left")
+      .select((col("id").as("doc_id") +: payload.map(col)) ++
+        Seq(col("dup_src").isNotNull.as("is_dup"), col("dup_src")): _*)
+  }
+
+  /** One row per (id, band) — `id`, the `carry` columns, `band` and the
+    * key (a struct key as its fields) — and the join column names. */
+  private def rows(sigs: DataFrame, carry: Seq[String],
+      bands: Column): (DataFrame, Seq[String]) = {
+    val kept = col("id") +: carry.map(col)
+    val r0 = sigs.select(kept :+ posexplode(bands).as(Seq("band", "key")): _*)
+    val r = r0.schema("key").dataType match {
+      case _: org.apache.spark.sql.types.StructType =>
+        r0.select(kept :+ col("band") :+ col("key.*"): _*)
+      case _ => r0
+    }
+    (r, r.columns.toSeq.diff("id" +: carry))
+  }
+
+  private def on(keys: Seq[String]): Column =
+    keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+
+  /** `id` and `cols` of the aliased side, suffixed `_a` / `_b`. */
+  private def side(alias: String, suffix: String, cols: Seq[String])
+      : Seq[Column] =
+    ("id" +: cols).map(c => col(s"$alias.$c").as(c + suffix))
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -105,12 +105,12 @@ object Similarity {
     aggregate(lshBits(vec, planeMatrix(salt, planes, 64)),
       lit(0L), (acc, b) => acc * 2 + b)
 
-  /** Approximate near-neighbor pairs via BANDED random-hyperplane LSH:
-    * candidates collide on any `bandBits`-bit band of any rotation's
-    * signature (P[found] = 1-(1-p^bandBits)^(bands·rotations), p =
-    * 1-θ/π), then exact cosine verifies, keeping only true positives.
-    * The shuffle key is (rot, band, bandHash) — the N×N product never
-    * forms; quadratic work is bounded by bucket size.
+  /** Approximate near-neighbor pairs via banded random-hyperplane LSH
+    * on the [[BandJoin.pairs]] core: `rotations` independent
+    * `planes`-bit signatures, each cut into `bandBits`-bit bands; pairs
+    * colliding in any band are verified by exact cosine ≥ `threshold`
+    * (P[found] = 1-(1-p^bandBits)^(bands·rotations), p = 1-θ/π).
+    * Returns (id_a, id_b, cos).
     *
     * SIZE THE BANDS TO THE CORPUS (r9 rehearsal finding): a band has
     * only 2^bandBits buckets and that count does not grow with the
@@ -126,71 +126,24 @@ object Similarity {
       planes: Int = 16, bandBits: Int = 4, rotations: Int = 3,
       threshold: Double = 0.85, dim: Int = 64): DataFrame = {
     require(planes % bandBits == 0, "planes must be divisible by bandBits")
-    val bands = planes / bandBits
-    // Materialize.checkpoint (localCheckpoint by default), not persist
-    // (r14): same multi-consumer materialization, but without
-    // registering the subplan with the CacheManager (the r13 cross-query
-    // plan-substitution gotcha) and without a never-released cache
-    // entry. Eager is explicit (r14 ADVICE), and both intermediates are
-    // RELEASED before returning — the returned frame is its own
-    // (pair-sized) checkpoint, mirroring connectedComponents.
-    val base = Materialize.checkpoint(
-      corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec")),
-      eager = true)
     graft.functions.Sketches.register(corpus.sparkSession)
+    val bands = planes / bandBits
     val mask = (1L << bandBits) - 1
-    // All rotations' signatures are computed in ONE pass over the corpus
-    // (an array-of-structs explode), not a per-rotation unionAll — one
-    // scan + one cache write instead of `rotations` branches. The slim
-    // (id, bucket) rows are cached: the self-join below would otherwise
-    // recompute the whole signature pipeline for each join side.
-    val rotSigs = array(Seq.range(0, rotations).map { rot =>
-      // packed signature via the codegen'd expression (tight JVM loop)
-      struct(lit(rot).as("rot"),
-        graft.functions.Sketches.hyperplaneSignature(col("vec"),
-          typedlit(planeMatrix(rot, planes, dim))).as("sig"))
-    }: _*)
-    val bucketed0 = base
-      .select(col("id"), explode(rotSigs).as("rs"))
-      .select(col("id"), col("rs.rot").as("rot"), col("rs.sig").as("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      // xxhash64 over (rot, band, bits) namespaces the bands, so the
-      // single `bucket` long is the whole join key; a cross-namespace
-      // hash collision can only ADD a candidate pair, which the exact
-      // cosine verify below discards — recall is unaffected
-      .select(col("id"),
-        xxhash64(col("rot"), col("band"),
-          expr(s"shiftright(sig, CAST(band * $bandBits AS INT)) & ${mask}L"))
-          .as("bucket"))
-    val bucketed = Materialize.checkpoint(bucketed0, eager = true)
-    // dedup candidates on the id pair BEFORE fetching vectors — hashing
-    // (long, long) in the distinct shuffle, not 64-double arrays
-    val cand = bucketed.select(col("id").as("id_a"), col("bucket")).as("l")
-      .join(bucketed.select(col("id").as("id_b"), col("bucket")).as("r"),
-        col("l.bucket") === col("r.bucket") && col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    // Explicit numbered repartition before the exact-cosine verify:
-    // candidate-pair rows are tiny in BYTES, so AQE's size-based
-    // coalescing would pack the whole CPU-bound cosine stage into a
-    // couple of partitions; a user repartition(n) is honored by AQE and
-    // keeps the verify at full parallelism. (Same reasoning at cluster
-    // scale: cost here is per-row compute, not bytes.)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val out = Materialize.checkpoint(
-      cand
-        .join(base.select(col("id").as("id_a"), col("vec").as("va")), "id_a")
-        .join(base.select(col("id").as("id_b"), col("vec").as("vb")), "id_b")
-        .repartition(par, col("id_a"), col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          round(cosine(col("va"), col("vb")), 6).as("cos"))
-        .filter(col("cos") >= threshold),
-      eager = true)
-    // the eager output copy owns the data now — release the corpus-sized
-    // intermediates instead of leaving them to driver GC (r14 ADVICE)
-    GraftSqlShim.unpersistLocalCheckpoint(base)
-    GraftSqlShim.unpersistLocalCheckpoint(bucketed)
-    out
+    val rots = (0 until rotations).map(rot => s"rot$rot")
+    // one packed signature per rotation, computed once per vector and
+    // checkpointed with it; the band keys only slice them
+    val sigs = corpus.select(col(idCol).as("id"),
+        asDouble(col(vecCol)).as("vec"))
+      .select(col("id") +: col("vec") +: rots.zipWithIndex.map {
+        case (r, rot) => graft.functions.Sketches.hyperplaneSignature(
+          col("vec"), typedlit(planeMatrix(rot, planes, dim))).as(r)
+      }: _*)
+    BandJoin.pairs(sigs,
+      array((for ((r, rot) <- rots.zipWithIndex; b <- 0 until bands)
+        yield shiftright(col(r), b * bandBits).bitwiseAND(lit(mask))
+      ): _*),
+      Seq(round(cosine(col("vec_a"), col("vec_b")), 6).as("cos")),
+      col("cos") >= threshold, fetch = true, spreadVerify = true)
   }
 
   /** All pairs (id_a < id_b) with cosine >= threshold, by brute-force

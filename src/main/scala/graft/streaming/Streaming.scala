@@ -221,7 +221,7 @@ object Streaming {
         if (!fs.exists(storePath) ||
             !fs.listStatus(storePath).exists(s =>
               s.getPath.getName.startsWith("batch_id=")))
-          graft.pipeline.Dedup.emptyWideSigStore(spark)
+          graft.pipeline.Dedup.emptySigStore(spark, Seq("sig0", "sig1"))
         else spark.read.parquet(storeDir)
           .filter(col("batch_id") < batchId)
           .select(col("id"), col("sig0"), col("sig1"))

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Engine
 import graft.pipeline.{Clustering, Decontamination, Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Pipeline-tier scale rehearsal (r9): the TPC-DS gate has ×10/×100/×300
   * rehearsals, but the LLM-pipeline operators' 100 TB posture was
@@ -31,18 +31,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object PipeScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val fac = sys.env.getOrElse("SPARK_GRAFT_PIPE_SCALE", "20").toInt
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(cpus, "pipescale")
 
     val docs = Engine.table(spark, sf, "documents")
       .select(col("doc_id"), col("text"))

@@ -451,11 +451,10 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("simhashPairs at maxHamming > 3 dispatches wide and stays complete") {
-    // the narrow path's fixed 4×16-bit chunks only pigeonhole-cover
-    // hamming <= 3 (r11 review: mh=4+ used to silently miss pairs whose
-    // diff bits span 4 distinct chunks); mh > 3 now routes to the wide
-    // path, whose chunk count mh+1 holds for ANY sigLongs incl. 1.
-    // Completeness vs brute force over the same 63-bit signature:
+    // every (sigLongs, maxHamming) runs the wide parameter set: chunk
+    // count mh+1 for ANY sigLongs incl. 1, and ONE signature family
+    // (xxhash64(t, j)), so raising mh can only add pairs. Completeness
+    // vs brute force over the same 63-bit signature, at mh = 3 and 4:
     graft.functions.Sketches.register(spark)
     val sigs = docs.select(col("doc_id"),
       graft.functions.Sketches.simhash63(
@@ -468,10 +467,16 @@ class PipelineSpec extends AnyFunSuite {
           .as("hamming"))
       .filter(col("hamming") <= 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val blocked = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(blocked == brute,
-      s"missing=${(brute diff blocked).take(3)} extra=${(blocked diff brute).take(3)}")
+    val Seq(at3, at4) = Seq(3, 4).map { mh =>
+      val blocked = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = mh)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val want = brute.filter(_._3 <= mh)
+      assert(blocked == want, s"mh=$mh: missing=${(want diff blocked).take(3)} " +
+        s"extra=${(blocked diff want).take(3)}")
+      blocked
+    }
+    assert(at3.nonEmpty && at3.subsetOf(at4),
+      s"mh=3 pairs not in mh=4: ${(at3 diff at4).take(3)}")
   }
 
   test("NearestCells kernel == HOF spec, both metrics, nProbe 1 and 4") {

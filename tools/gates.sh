@@ -24,6 +24,12 @@
 set -uo pipefail
 cd "$(dirname "$0")/.."
 LOG=target/gates.log
+# Defaults sized to this box: every core, and half the RAM clamped to
+# 2..24 GB (the Tier-1 test command's SPARK_DRIVER_MEM rule, with the
+# ceiling of the old fixed 24g default). Override via the environment.
+: "${SPARK_GRAFT_CPUS:=$(env -u OMP_NUM_THREADS nproc)}"
+: "${JVM_MEM:=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+export SPARK_GRAFT_CPUS JVM_MEM
 echo "== gates run $(date -u +%FT%TZ) ==" | tee -a "$LOG"
 
 fail() { echo "GATE FAIL: $1" | tee -a "$LOG"; exit 1; }
@@ -31,8 +37,7 @@ PASSED=()
 ok()   { echo "GATE PASS: $1" | tee -a "$LOG"; PASSED+=("$1"); }
 
 run_corpus() { # $1 = sf dir, $2 = out dir
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-12}" \
-    tools/run_jvm.sh graft.Verify "$1" "$2" >"$2.log" 2>&1 \
+  tools/run_jvm.sh graft.Verify "$1" "$2" >"$2.log" 2>&1 \
     || fail "Verify crashed at $1 (see $2.log)"
   python3 tools/check.py "$1" "$2" >"$2.check" 2>&1 \
     || { tail -15 "$2.check"; fail "oracle compare at $1"; }
@@ -41,9 +46,7 @@ run_corpus() { # $1 = sf dir, $2 = out dir
 
 run_tpcds() { # $1 = scale
   local out="target/tpcds_gate_x$1"
-  SPARK_GRAFT_TPCDS_SCALE="$1" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-12}" \
-    JVM_MEM="${JVM_MEM:-24g}" \
-    SPARK_GRAFT_ONLY="$(python3 - <<'EOF'
+  SPARK_GRAFT_TPCDS_SCALE="$1" SPARK_GRAFT_ONLY="$(python3 - <<'EOF'
 names = [f"tpcds_q{n:02d}" for n in range(1, 100)]
 two = {14, 23, 24, 39}
 print(",".join(n + s for n in names
@@ -74,7 +77,6 @@ if [[ " $* " != *" --skip-x100 "* ]]; then
   run_tpcds 100; ok "tpcds x100"
 fi
 SPARK_GRAFT_PIPE_SCALE=20 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" JVM_MEM="${JVM_MEM:-24g}" \
   tools/run_jvm.sh graft.tools.PipeScale >target/pipescale.log 2>&1 \
   || { tail -15 target/pipescale.log; fail "pipescale x20"; }
 grep "ALL PASS" target/pipescale.log || fail "pipescale x20 (no ALL PASS)"
