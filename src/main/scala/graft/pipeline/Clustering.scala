@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Connected components over a near-duplicate pair list — the clustering
   * step a training-data dedup pipeline runs AFTER candidate generation
@@ -14,20 +15,27 @@ import org.apache.spark.sql.functions._
   * aggregate.rs); this is a beyond-reference scale-path operator like
   * the rest of graft.pipeline.
   *
-  * Algorithm: alternating large-star / small-star edge rewiring
-  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  * SoCC'14). Each round is two groupBy/join shuffles over the CURRENT
-  * edge list only — no adjacency lists are ever collected (a
-  * collect_list of a hub's neighbors can't spill; the groupBy+join
-  * formulation can), so a 100 TB edge set with power-law hubs still
-  * partitions. Converges in O(log n) rounds to a star forest whose
-  * roots are the component minima; a naive min-label propagation needs
-  * O(diameter) rounds — a 1000-long dup chain would take 1000 shuffles.
-  *
-  * Driver-side work is the fixpoint loop only (same contract as
-  * plans/RecursiveCte): each iteration is one Spark job whose
-  * convergence probe doubles as the checkpoint materializer;
-  * localCheckpoint cuts lineage, superseded checkpoints are released.
+  * Two paths, one result (ClusteringSpec holds both to a union-find
+  * oracle):
+  *  - Driver: an edge list of at most `DriverEdges` rows with integral
+  *    ids is collected in one job and finished by a path-compressing
+  *    union-find on the driver. Real dedup pair lists are this small
+  *    (25 edges at sf0.01, 256 at sf0.1 — SCALE.md), and there every
+  *    Spark job of the loop below is fixed cost, not work.
+  *  - Distributed: alternating large-star / small-star edge rewiring
+  *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  *    SoCC'14). Each round is window-min + rewire over the CURRENT edge
+  *    list only — no adjacency lists are ever collected (a
+  *    collect_list of a hub's neighbors can't spill; the shuffled
+  *    formulation can), so a 100 TB edge set with power-law hubs still
+  *    partitions. Converges in O(log n) rounds to a star forest whose
+  *    roots are the component minima; a naive min-label propagation
+  *    needs O(diameter) rounds — a 1000-long dup chain would take 1000
+  *    shuffles. Here driver-side work is the fixpoint loop only (same
+  *    contract as plans/RecursiveCte): each probed iteration is one
+  *    Spark job whose convergence probe doubles as the checkpoint
+  *    materializer; localCheckpoint cuts lineage, superseded
+  *    checkpoints are released.
   */
 object Clustering {
 
@@ -78,24 +86,104 @@ object Clustering {
     * the min-id doc survives dedup, as in exactDedup).
     *
     * `edges` is undirected; self-pairs and duplicates are tolerated.
-    * Vertex ids may be any orderable type (both columns must agree).
+    * Vertex ids may be any orderable type (both columns must agree). A
+    * pair with a null endpoint adds its other endpoint as a vertex and
+    * one (null, null) row. Edge lists of at most `DriverEdges` rows with
+    * LongType or IntegerType ids are finished on the driver, always
+    * exactly; larger or other-typed lists run the distributed loop.
     */
   def connectedComponents(
-      edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50): DataFrame = {
+      edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val ein = edgeList(edges, aCol, bCol)
+    onDriver(ein) match {
+      case Some(out) => release(ein); out
+      case None => starForest(ein)
+    }
+  }
+
+  /** The distributed loop whatever the input size — the same result as
+    * `connectedComponents`; tests hold the two paths to one law. */
+  private[graft] def connectedComponentsDistributed(
+      edges: DataFrame, aCol: String, bCol: String): DataFrame =
+    starForest(edgeList(edges, aCol, bCol))
+
+  /** Edge lists up to this many rows are finished on the driver. On 4
+    * cores the driver path won at every size measured, 2^12..2^20 edges,
+    * chains and cliques (SCALE.md, "Dedup — cluster assignment"), so the
+    * cap bounds driver heap, not time: at 2^16 disjoint pairs (the most
+    * vertices per edge) the call allocates 82 MB on the driver thread
+    * and the local result holds 15 MB; at 2^18, 305 MB and 59 MB. */
+  private[graft] val DriverEdges: Int = 1 << 16
+
+  /** Rounds after which the distributed loop stops, converged or not. */
+  private val MaxRounds = 50
+
+  // materialize the pair list ONCE: it feeds the size probe, the loop
+  // seed, the vertex set, and the final assignment — without this a
+  // costly candidate-generation plan (e.g. exact ngram pairs) re-executes
+  // per consumer. Both paths release it before returning.
+  private def edgeList(edges: DataFrame, aCol: String, bCol: String) =
+    Materialize.checkpoint(
+      edges.select(col(aCol).as("u"), col(bCol).as("v")), eager = true)
+
+  /** Collects at most `DriverEdges + 1` edges in one job (coalesce(1)
+    * keeps `limit` from scanning the partitions in several rounds). If
+    * they all fit, union-find with path compression, rooting each union
+    * at the smaller id, so every root is its component's minimum. The
+    * rows and schema are the loop's: every distinct endpoint once, and
+    * one (null, null) row if any endpoint is null. */
+  private def onDriver(ein: DataFrame): Option[DataFrame] = {
+    val (uf, vf) = (ein.schema("u"), ein.schema("v"))
+    val isLong = uf.dataType == LongType
+    if (uf.dataType != vf.dataType || !(isLong || uf.dataType == IntegerType))
+      return None
+    val rows = ein.coalesce(1).limit(DriverEdges + 1).collect()
+    if (rows.length > DriverEdges) return None
+    val ids = new Array[Long](2 * rows.length)
+    val parent = new Array[Int](2 * rows.length)
+    val index = new scala.collection.mutable.LongMap[Int](2 * rows.length)
+    var n = 0
+    var sawNull = false
+    def vertex(r: Row, i: Int): Int =
+      if (r.isNullAt(i)) { sawNull = true; -1 }
+      else {
+        val x = if (isLong) r.getLong(i) else r.getInt(i).toLong
+        index.getOrElseUpdate(x, { ids(n) = x; parent(n) = n; n += 1; n - 1 })
+      }
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (parent(y) != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    rows.foreach { r =>
+      val (a, b) = (vertex(r, 0), vertex(r, 1))
+      if (a >= 0 && b >= 0) {
+        val (ra, rb) = (find(a), find(b))
+        if (ids(ra) < ids(rb)) parent(rb) = ra
+        else if (ids(rb) < ids(ra)) parent(ra) = rb
+      }
+    }
+    def box(x: Long): Any = if (isLong) x else x.toInt
+    val out = (0 until n).map(k => Row(box(ids(k)), box(ids(find(k))))) ++
+      (if (sawNull) Seq(Row(null, null)) else Nil)
+    val nullable = uf.nullable || vf.nullable
+    val schema = StructType(Seq(
+      StructField("id", uf.dataType, nullable),
+      StructField("component", uf.dataType, nullable)))
+    Some(ein.sparkSession.createDataFrame(
+      java.util.Arrays.asList(out: _*), schema))
+  }
+
+  /** The distributed large-star / small-star fixpoint over `ein`. */
+  private def starForest(ein: DataFrame): DataFrame = {
     // edge-set fingerprint: (count, xor of row hashes) — order-free,
     // overflow-free under ANSI; probe job doubles as materializer
     def probe(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    // materialize the pair list ONCE: it feeds the loop seed, the vertex
-    // set, and the final assignment — without this a costly candidate-
-    // generation plan (e.g. exact ngram pairs) re-executes per consumer.
-    // Released before returning: the returned frame is its own (vertex-
-    // sized) checkpoint, so no edge-sized blocks outlive the call.
-    val ein = Materialize.checkpoint(
-      edges.select(col(aCol).as("u"), col(bCol).as("v")), eager = true)
     var e = Materialize.checkpoint(
       ein.filter(col("u") =!= col("v")).distinct(), eager = false)
     var sig = probe(e)
@@ -110,8 +198,8 @@ object Clustering {
     // sig(e_{k}) == sig(e_{k-2}) only at the fixpoint, detected at most
     // 2 (cheap, already-converged) rounds late — the final edge set is
     // the same star forest either way, so assignments are unchanged.
-    while (i < maxIter && !converged) {
-      val steps = math.min(2, maxIter - i)
+    while (i < MaxRounds && !converged) {
+      val steps = math.min(2, MaxRounds - i)
       var nx = e
       for (_ <- 1 to steps) nx = ccRound(nx)
       val next = Materialize.checkpoint(nx, eager = false)
@@ -123,7 +211,7 @@ object Clustering {
       i += steps
     }
     // star forest: every non-root has exactly one edge (id → root);
-    // min() guards the maxIter-truncated case, roots map to themselves
+    // min() guards the MaxRounds-truncated case, roots map to themselves
     val verts = ein.select(col("u").as("id"))
       .union(ein.select(col("v").as("id")))
       .distinct()

@@ -1,13 +1,19 @@
 package graft
 
 import graft.pipeline.{Clustering, Dedup}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Connected-components properties: equivalence with a driver-side
+/** Connected-components properties: equivalence with a test-local
   * union-find on random graphs (chains force many label hops, so a
   * naive one-round propagation would fail), star-forest fixpoint
-  * stability, and dedupByPairs semantics. */
+  * stability, null and IntegerType endpoints, size dispatch, and
+  * dedupByPairs semantics. Every law is checked on both paths: the
+  * driver union-find `connectedComponents` takes on small edge lists,
+  * and the distributed loop. */
 class ClusteringSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -25,10 +31,30 @@ class ClusteringSpec extends AnyFunSuite {
     verts.map(v => v -> find(v)).toMap
   }
 
-  private def ccOf(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  private def local(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  /** (path name, components) for both paths; the driver path must really
+    * be taken on these small inputs. */
+  private def bothPaths(edges: DataFrame, a: String, b: String)
+      : Seq[(String, DataFrame)] = {
+    val driver = Clustering.connectedComponents(edges, a, b)
+    assert(local(driver), "small edge list did not take the driver path")
+    val loop = Clustering.connectedComponentsDistributed(edges, a, b)
+    assert(!local(loop))
+    assert(driver.schema === loop.schema)
+    Seq("driver" -> driver, "loop" -> loop)
+  }
+
+  private def asMap(cc: DataFrame): Map[Long, Long] =
+    cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Asserts both paths equal the union-find oracle on `edges`. */
+  private def checkBoth(edges: Seq[(Long, Long)], clue: String = ""): Unit = {
     import spark.implicits._
-    Clustering.connectedComponents(edges.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = unionFind(edges)
+    for ((path, cc) <- bothPaths(edges.toDF("a", "b"), "a", "b"))
+      assert(asMap(cc) === want, s"$path $clue")
   }
 
   test("matches union-find on random graphs") {
@@ -38,20 +64,72 @@ class ClusteringSpec extends AnyFunSuite {
       val edges = Seq.fill(n) {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
       }.filter(e => e._1 != e._2)
-      assert(ccOf(edges) === unionFind(edges), s"trial $trial")
+      checkBoth(edges, s"trial $trial")
     }
   }
 
   test("long chain collapses to one component (log-round convergence)") {
     val chain = (0L until 200L).sliding(2).map(s => (s(1), s(0))).toSeq
-    val cc = ccOf(chain)
-    assert(cc.size === 200)
-    assert(cc.values.toSet === Set(0L))
+    import spark.implicits._
+    for ((path, cc) <- bothPaths(chain.toDF("a", "b"), "a", "b")) {
+      val m = asMap(cc)
+      assert(m.size === 200, path)
+      assert(m.values.toSet === Set(0L), path)
+    }
   }
 
   test("self-loops and duplicate/reversed edges are tolerated") {
-    val cc = ccOf(Seq((1L, 1L), (1L, 2L), (2L, 1L), (1L, 2L), (5L, 4L)))
-    assert(cc === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L))
+    val edges = Seq((1L, 1L), (1L, 2L), (2L, 1L), (1L, 2L), (5L, 4L), (7L, 7L))
+    assert(unionFind(edges) === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L,
+      7L -> 7L))
+    checkBoth(edges)
+  }
+
+  test("null endpoints give the same rows on both paths") {
+    // the loop drops null-ended edges from the fixpoint but keeps every
+    // endpoint as a vertex: the non-null end stands alone, and the null
+    // end becomes one (null, null) row
+    import spark.implicits._
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(1L)), (Some(2L), Some(3L)), (None, None),
+      (Some(3L), None), (Some(4L), Some(4L))).toDF("a", "b")
+    val want = Set[(Option[Long], Option[Long])](
+      Some(1L) -> Some(1L), Some(2L) -> Some(2L), Some(3L) -> Some(2L),
+      Some(4L) -> Some(4L), None -> None)
+    for ((path, cc) <- bothPaths(edges, "a", "b")) {
+      val rows = cc.collect().toSeq.map { r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          Option(r.get(1)).map(_.asInstanceOf[Long]))
+      }
+      assert(rows.size === want.size, path)
+      assert(rows.toSet === want, path)
+    }
+  }
+
+  test("IntegerType ids keep their type and match union-find") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val edges = Seq.fill(60)((rnd.nextInt(80), rnd.nextInt(80)))
+    val want = unionFind(edges.map(e => (e._1.toLong, e._2.toLong)))
+    for ((path, cc) <- bothPaths(edges.toDF("a", "b"), "a", "b")) {
+      assert(cc.schema.map(_.dataType) === Seq(IntegerType, IntegerType), path)
+      val got = cc.collect().map(r => r.getInt(0).toLong -> r.getInt(1).toLong)
+      assert(got.toMap === want, path)
+    }
+  }
+
+  test("DriverEdges + 1 disjoint pairs take the loop and match union-find") {
+    // disjoint pairs are a star forest already: the loop converges in
+    // its first probed iteration, so this stays cheap
+    import spark.implicits._
+    val edges = (0L to Clustering.DriverEdges.toLong).map(k => (2 * k, 2 * k + 1))
+    val cc = Clustering.connectedComponents(edges.toDF("a", "b"), "a", "b")
+    assert(!local(cc), s"${edges.size} edges took the driver path")
+    assert(asMap(cc) === unionFind(edges))
+    val atCap = Clustering.connectedComponents(
+      edges.tail.toDF("a", "b"), "a", "b")
+    assert(local(atCap), s"${edges.size - 1} edges took the loop")
+    assert(asMap(atCap) === unionFind(edges.tail))
   }
 
   test("dedupByPairs keeps exactly the cluster minima plus unpaired rows") {
@@ -73,8 +151,7 @@ class ClusteringSpec extends AnyFunSuite {
     spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
     spark.conf.set(graft.pipeline.Materialize.ReliableKey, "true")
     try {
-      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (12L, 12L))
-      assert(ccOf(edges) === unionFind(edges))
+      checkBoth(Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (12L, 12L)))
       val files = java.nio.file.Files.walk(dir.toPath).iterator()
       val sawRddData = Iterator.continually(files)
         .takeWhile(_.hasNext).map(_.next().toString)
@@ -95,9 +172,9 @@ class ClusteringSpec extends AnyFunSuite {
       .select(col("id_a"), col("id_b")).persist()
     val edges = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(edges.nonEmpty)
-    val cc = Clustering.connectedComponents(pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = unionFind(edges)
+    for ((path, cc) <- bothPaths(pairs, "id_a", "id_b"))
+      assert(asMap(cc) === want, path)
     pairs.unpersist()
-    assert(cc === unionFind(edges))
   }
 }

@@ -1,14 +1,22 @@
 #!/usr/bin/env bash
 # Run a graft main class directly against the compiled classes + Spark
 # jars — no sbt build lock, so long rehearsals can run concurrently with
-# interactive sbt work. Compile first (`sbt compile`); this script does
-# NOT recompile.
+# interactive sbt work. Build first with
+#   sbt compile "Compile / copyResources"
+# (`sbt compile` alone leaves src/main/resources out of the class dir,
+# and every main that touches SparkEntry then dies on a missing SQL
+# resource); this script does NOT recompile.
 #
 # Usage: tools/run_jvm.sh <mainClass> [args...]
 # Env:   JVM_MEM (default 8g) → -Xmx
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift
+if [[ ! -f target/scala-2.13/classes/tpcds/q01.sql ]]; then
+  echo "run_jvm.sh: resources missing from target/scala-2.13/classes;" \
+    "run: sbt compile \"Compile / copyResources\"" >&2
+  exit 1
+fi
 OPENS=(java.lang java.lang.invoke java.lang.reflect java.io java.net \
        java.nio java.util java.util.concurrent java.util.concurrent.atomic)
 FLAGS=()
