@@ -409,25 +409,10 @@ object Classifier {
     * odds). One distributed job per iteration: featurize (cached),
     * K error columns per doc, one explode→groupBy(bucket) carrying K
     * integer sums (bias gradient rides as sentinel bucket −1); the
-    * driver collects ≤ d+1 rows of K longs. */
-  def trainSoftmaxFixed(
-      train: DataFrame, textCol: String, labelCol: String,
-      classes: Seq[String],
-      initWq: Map[String, Array[Long]], initBq: Map[String, Long],
-      iters: Int, lr: Double,
-      includeBigrams: Boolean = true)
-      : (Map[String, Array[Long]], Map[String, Long]) = {
-    val d = initWq.headOption.map(_._2.length).getOrElse(0)
-    val feats = featurizeMulti(train, textCol, labelCol, d, includeBigrams)
-      .persist()
-    // the Feats variant's n-count materializes the cache before the loop
-    try trainSoftmaxFixedFeats(feats, classes, initWq, initBq, iters, lr)
-    finally feats.unpersist()
-  }
-
-  /** [[trainSoftmaxFixed]] over a pre-featurized (y, fb) frame — the
-    * caller owns its materialization (the loop reads it every
-    * iteration; an unmaterialized frame would recompute per pass). */
+    * driver collects ≤ d+1 rows of K longs. Runs over a
+    * pre-featurized (y, fb) frame ([[featurizeMulti]]) — the caller
+    * owns its materialization (the loop reads it every iteration; an
+    * unmaterialized frame would recompute per pass). */
   def trainSoftmaxFixedFeats(
       feats: DataFrame, classes: Seq[String],
       initWq: Map[String, Array[Long]], initBq: Map[String, Long],

@@ -462,8 +462,8 @@ object Dedup {
   /** The rewrite stage of [[cutDuplicateSpans]] alone, given an
     * already-computed [[duplicateSpans]] span set — split so the
     * ×100 scaling of the span DISCOVERY and the span APPLICATION can
-    * be attributed separately (tools/CutAb, r14; the r13 verdict's
-    * substring-cut exponent decomposition), and so callers that
+    * be attributed separately (SCALE.md "Dedup — exact substring
+    * spans", r14 adjudication; OPTIMIZATION_r14 §8), and so callers that
     * materialized spans (e.g. to inspect them) don't pay the
     * discovery twice. Identical plan to the fused call. */
   def cutWithSpans(

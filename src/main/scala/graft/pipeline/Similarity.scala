@@ -361,7 +361,8 @@ object Similarity {
     * per-query scoring cost) by nProbe/nCells, but the shortlist rule
     * stays sized by the FULL n: router uncertainty adds shortlist
     * pressure on top of the error-band distractors (measured ×20:
-    * slice-sized rerank 0.746 vs full-rule 0.840 — see IvfPqAb). */
+    * slice-sized rerank 0.746 vs full-rule 0.840 — SCALE.md "IVF × PQ
+    * composition rule"). */
   def pqParams(n: Long, topk: Int): (Int, Int) = {
     val raw = math.max(1L, n / 200L)
     val h = java.lang.Long.highestOneBit(raw)
@@ -523,13 +524,13 @@ object Similarity {
     * THE FULL CORPUS SIZE: what probing divides is the ADC candidate
     * VOLUME (the per-query cost), NOT the shortlist requirement — the
     * shortlist must still absorb the error-band distractor count that
-    * grows with n PLUS the router's own uncertainty (measured, IvfPqAb
-    * ×20 at n=40k/256 cells/64 probed: slice-sized rer=5 → recall
-    * 0.746, full-corpus rer=14 → 0.840 at the same wall; probe ×2 →
-    * 0.880 = the router ceiling). Cells and codes both rank by squared
-    * L2, and `kmeansIters` refines the router with PLAIN L2 Lloyd
-    * (refineCentroidsL2 — +0.05 recall over unrefined samples; the
-    * spherical refiner would train a cosine objective the L2 router
+    * grows with n PLUS the router's own uncertainty (SCALE.md "IVF × PQ
+    * composition rule": ×20 at n=40k/256 cells/64 probed, slice-sized
+    * rer=5 → recall 0.746, full-corpus rer=14 → 0.840 at the same wall;
+    * probe ×2 → 0.880 = the router ceiling). Cells and codes both rank
+    * by squared L2, and `kmeansIters` refines the router with PLAIN L2
+    * Lloyd (refineCentroidsL2 — +0.05 recall over unrefined samples;
+    * the spherical refiner would train a cosine objective the L2 router
     * doesn't rank by). Returns (qid, nid, dist) — exact L2² for every
     * emitted row (approximation gates only shortlist membership). */
   def ivfPqTopK(

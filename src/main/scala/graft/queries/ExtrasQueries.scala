@@ -152,9 +152,10 @@ object ExtrasQueries {
       // threshold from the grouped result makes Spark re-plan the
       // grouped subtree for the broadcast side (no exchange reuse,
       // 0.504 → 0.643 s — the q14-CTE lesson), and the checkpointed
-      // fix was briefly ADOPTED in r10 then REVERTED: graft.tools.Q11Ab
-      // (fact replicated in-memory ×10/×30/×100, values identical both
-      // variants) showed checkpoint −19%/−10%/wash — but that harness
+      // fix was briefly ADOPTED in r10 then REVERTED: a replicated-fact
+      // probe (ROUND_NOTES_r10, verdict #6: fact replicated in-memory
+      // ×10/×30/×100, values identical both variants) showed
+      // checkpoint −19%/−10%/wash — but that harness
       // pays explode CPU on BOTH passes, overstating the second pass.
       // Against real parquet, like-for-like targeted bench (iters=7,
       // same box, same mode): checkpoint 0.49 s median vs this

@@ -13,7 +13,11 @@ import org.apache.spark.sql.types._
   */
 object MiscQueries {
 
-  private def scratch(name: String) = s"/tmp/graft_io/$name"
+  /** Scratch path for one write query's output: `graft_io/<name>` under
+    * `java.io.tmpdir` (default `/tmp`), the one scratch root of every
+    * query that writes files. */
+  private[queries] def scratch(name: String): String = java.nio.file.Paths
+    .get(System.getProperty("java.io.tmpdir"), "graft_io", name).toString
 
   val defs: Map[String, Q] = Map(
     // ── rows oracle for Bench's timing suites (r7 verdict #6): the pqf

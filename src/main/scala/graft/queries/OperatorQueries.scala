@@ -393,7 +393,8 @@ object OperatorQueries {
       Engine.table(s, d, "nation")
         .select(col("n_nationkey").as("k"), col("n_name").as("name"))
         // external path: immune to orphaned warehouse dirs across runs
-        .write.mode("overwrite").option("path", "/tmp/graft_io/insert_demo")
+        .write.mode("overwrite")
+        .option("path", MiscQueries.scratch("insert_demo"))
         .saveAsTable("graft_insert_demo")
       Engine.table(s, d, "nation").filter(col("n_nationkey") < 5)
         .select((col("n_nationkey") + 100).as("k"), col("n_name").as("name"))
@@ -474,8 +475,8 @@ object OperatorQueries {
       |FROM t FULL OUTER JOIN s
       |  ON t.pk = s.pk AND t.o_orderkey = s.o_orderkey
       |ORDER BY o_orderkey""") { (s, d) =>
-      val dir = "/tmp/graft_io/merge_pruned_" +
-        d.replaceAll("[^a-zA-Z0-9]", "_")
+      val dir = MiscQueries.scratch(
+        "merge_pruned_" + d.replaceAll("[^a-zA-Z0-9]", "_"))
       val orders = Engine.table(s, d, "orders")
         .select(pmod(col("o_orderkey"), lit(8)).as("pk"),
           col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))

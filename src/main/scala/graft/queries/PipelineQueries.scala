@@ -154,7 +154,7 @@ object PipelineQueries {
     * the 2^20 grid, then `iters` unrolled full-batch softmax-GD
     * iterations with 2^24-quantized per-(doc, class) errors — every
     * cross-engine accumulation is an INTEGER sum, mirroring
-    * Classifier.trainSoftmaxFixed operation-for-operation (scores are
+    * Classifier.trainSoftmaxFixedFeats operation-for-operation (scores are
     * exact dyadic doubles; softmax runs under max-subtraction so each
     * exp argument is a dyadic ≤ 0 on both engines; the engine-exp
     * 1-ulp caveat is the classifierSgdSqlDuck one). Final scoring and
@@ -1432,9 +1432,10 @@ object PipelineQueries {
     //    pass). The oracle replays EVERYTHING: LM counts, thresholds,
     //    labels, per-class bucket counts, weights, priors, scores,
     //    and the >=-chain argmax — no shipped literals. Learnability
-    //    measured before shipping (DistillAb): 0.480 vs majority
-    //    0.341 at sf0.1; sf0.01's 125-doc sample reads chance, which
-    //    the spec documents rather than hides ─────────────────────────
+    //    measured before shipping (SCALE.md "Quality — LM
+    //    distillation"): 0.480 vs majority 0.341 at sf0.1; sf0.01's
+    //    125-doc sample reads chance, which the spec documents rather
+    //    than hides ───────────────────────────────────────────────────
     "pipe_quality_distill" -> Q("""
       |WITH words AS (
       |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'),
@@ -1574,8 +1575,8 @@ object PipelineQueries {
     //    dyadic ≤ 0). The oracle replays the ENTIRE chain: teacher LM,
     //    tercile labels, NB init, quantization, all 5 GD iterations,
     //    refined scores, argmax — no shipped literals. Learnability
-    //    and the refinement gain measured BEFORE pinning (DistillAb
-    //    r14: see SCALE.md). ───────────────────────────────────────────
+    //    and the refinement gain measured BEFORE pinning (r14: SCALE.md
+    //    "Quality — LM distillation"). ─────────────────────────────────
     "pipe_quality_distill_refined" -> Q(
         distillRefineSqlDuck(iters = 5, lr = "0.05")) { (s, d) =>
       graft.functions.Sketches.register(s)

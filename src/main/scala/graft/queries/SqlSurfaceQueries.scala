@@ -162,9 +162,10 @@ object SqlSurfaceQueries {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
       }
-      rm(new java.io.File("/tmp/graft_io/ctas_demo"))
-      s.sql("""CREATE TABLE graft_ctas_demo
-              |USING parquet LOCATION '/tmp/graft_io/ctas_demo'
+      val dir = MiscQueries.scratch("ctas_demo")
+      rm(new java.io.File(dir))
+      s.sql(s"""CREATE TABLE graft_ctas_demo
+              |USING parquet LOCATION '$dir'
               |AS SELECT r_name, count(*) AS n_nations
               |   FROM nation JOIN region ON n_regionkey = r_regionkey
               |   GROUP BY r_name""".stripMargin)

@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.Similarity
 
-/** Shared ANN-recall accounting for the rehearsal harnesses (PipeScale
-  * stage 4c/4d and the IvfPqAb A/B — r11 review: two hand-kept copies
-  * of the replica-exclusion and shortlist arithmetic would drift).
+/** ANN-recall accounting for PipeScale's stages 4c/4d (PQ and IVF × PQ
+  * recall): one definition of the replica-exclusion and shortlist
+  * arithmetic, shared by both stages.
   *
   * Replica discipline: at replication factor `f` each query's literal
   * top-k is its own f−1 replicas, so both the ground truth and the

@@ -561,8 +561,8 @@ object PipeScale {
     //    floor), ≥0.95 at ×20/×50 — recall RISES with scale. Floors:
     //    no-collapse vs ×1, and ≥0.8 absolute once k reaches the
     //    256 cap (the rule's knee, mirroring the ivf 256-cell floor) ──
-    // exact squared-L2 ground truth (shared helpers: AnnRecall — also
-    // the IvfPqAb harness's accounting, one definition of recall),
+    // exact squared-L2 ground truth (shared helpers: AnnRecall, one
+    // definition of recall),
     // computed ONCE per corpus for the PQ (4c) and IVF×PQ (4d) stages
     import graft.tools.{AnnRecall => AR}
     val gt1 = AR.l2Exact(emb, queriesOf(emb, 40), 1)
@@ -595,15 +595,15 @@ object PipeScale {
     //    production ANN shape: router, ADC, and rerank all rank by
     //    squared L2 (refineCentroidsL2 trains the router on the same
     //    metric), parameters from BOTH sizing rules applied to the
-    //    FULL corpus. MEASURED (IvfPqAb ×20, n=40k, 256 cells/64
-    //    probed, k=256): sizing the rerank shortlist by the PROBED
-    //    slice (rer=5) reads 0.746 while the full-corpus rule (rer=14)
-    //    reads 0.840 at the same wall — the shortlist requirement
-    //    follows n (ADC error-band distractors PLUS router
-    //    uncertainty), while what probing divides is the ADC candidate
-    //    VOLUME (cost), not the shortlist. Doubling probe reads 0.880
-    //    (router ceiling); kmeansIters=0 reads 0.694 (L2 Lloyd buys
-    //    +0.05). Ground truth: the shared exact-L2 top-k. Floors:
+    //    FULL corpus. MEASURED (SCALE.md "IVF × PQ composition rule":
+    //    ×20, n=40k, 256 cells/64 probed, k=256): sizing the rerank
+    //    shortlist by the PROBED slice (rer=5) reads 0.746 while the
+    //    full-corpus rule (rer=14) reads 0.840 at the same wall — the
+    //    shortlist requirement follows n (ADC error-band distractors
+    //    PLUS router uncertainty), while what probing divides is the
+    //    ADC candidate VOLUME (cost), not the shortlist. Doubling probe
+    //    reads 0.880 (router ceiling); kmeansIters=0 reads 0.694 (L2
+    //    Lloyd buys +0.05). Ground truth: the shared exact-L2 top-k. Floors:
     //    no-collapse vs ×1 and ≥0.75 at the ≥256-cell knee (the
     //    router's 0.8 floor minus the PQ shortlist's measured ≤0.05
     //    composed loss). ───────────────────────────────────────────────

@@ -4,10 +4,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Shared stage-metrics accumulator for the measurement tools (r12
-  * review: PipeScale / ShuffleProbe / LogisticAb each carried a
-  * near-identical anonymous listener and had already drifted in which
-  * fields they tracked). Attach with addSparkListener, detach BEFORE
+/** Stage-metrics accumulator for PipeScale's shuffle and spill
+  * accounting (one listener for every stage that measures bytes).
+  * Attach with addSparkListener, detach BEFORE
   * running any of the caller's own bookkeeping aggregations (they
   * would otherwise contaminate the very bytes being measured), and
   * remember the listener bus is async — sleep or drain before reading. */

@@ -405,8 +405,9 @@ object TpcdsQueries {
     * won every cell (×1 q14a 2.15→1.24s plain→ckpt but 1.73s cache; ×10
     * 3.79→3.34 vs 3.71); cache's lazy columnar build re-scans on first
     * use of each reference arm. Adoption is allowlist-gated: each entry
-    * was A/B'd plain-vs-materialized (graft.tools.CteAb) and only
-    * statements with a reproducible win are listed. */
+    * was A/B'd plain-vs-materialized and only statements with a
+    * reproducible win are listed (numbers: SCALE.md "Round 8 plan/scale
+    * deltas", q14 shared-CTE materialization; ROUND_NOTES_r9). */
   private[graft] def materialize(s: SparkSession, exec: String): DataFrame =
     parseWith(exec) match {
       case None => s.sql(exec)
@@ -488,14 +489,8 @@ object TpcdsQueries {
     * subtree that materialization forfeits. q74 0.81→0.98 and q57
     * 0.95→1.07 and q75 0.95→1.26 regressed at ×10 — rejected; q02 1.04
     * / q31 1.00 / q64 1.01 flat — left inline. */
-  private[graft] val cteMaterialized: Set[String] =
+  private val cteMaterialized: Set[String] =
     Set("tpcds_q14a", "tpcds_q14b", "tpcds_q27", "tpcds_q36", "tpcds_q47")
-
-  /** Totalized executed text for one entry — hook for graft.tools.CteAb. */
-  private[graft] def execText(name: String): String = {
-    val t = texts.toMap.apply(name)
-    totalize(name, t)
-  }
 
   val defs: Map[String, Q] = texts.map { case (name, text) =>
     name -> Q(

@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The generated-class cache must hold the engine's working set: with
   * Spark's default of 100 entries, every pass over TPC-H q1–q22 evicted
-  * and recompiled its whole-stage classes (see Engine.session). */
+  * and recompiled its whole-stage classes (see Engine.session). The cap
+  * is JVM-global and set by whichever session compiles first, so every
+  * session in `src/main` must come from `Engine.session`. */
 class CodegenCacheSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   private lazy val spark = SparkTestSession.spark
@@ -21,5 +23,29 @@ class CodegenCacheSpec extends AnyFunSuite {
     val second = compiles()
     assert(second == 0,
       s"second round compiled $second classes (first round: $first)")
+  }
+
+  test("Engine.session is the only SparkSession builder in src/main") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"run from the repo root: no $root under ${sys.props("user.dir")}")
+    val factory = root.resolve("graft/Engine.scala")
+    val builder = raw"SparkSession\s*\.\s*builder".r
+    val offenders = {
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .filter(_ != factory)
+        .flatMap { f =>
+          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+          builder.findAllMatchIn(text).map { m =>
+            s"$f:${text.take(m.start).count(_ == '\n') + 1}"
+          }
+        }.toList.sorted
+      finally files.close()
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} SparkSession builders outside Engine.session: " +
+        offenders.mkString(", "))
   }
 }

@@ -9,6 +9,11 @@
 #
 # Usage: tools/run_jvm.sh <mainClass> [args...]
 # Env:   JVM_MEM (default 8g) → -Xmx
+#
+# stdout/stderr are encoded as UTF-8 whatever the locale: with no LANG
+# set, JDK 17 would print every non-ASCII character (the `×20` in
+# PipeScale's stage names) as `?`. JDK 17 reads `sun.stdout.encoding`;
+# the public `stdout.encoding` property only exists from JDK 19.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MAIN="$1"; shift
@@ -24,6 +29,7 @@ for p in "${OPENS[@]}"; do FLAGS+=(--add-opens "java.base/$p=ALL-UNNAMED"); done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   FLAGS+=(--add-opens "java.base/$p=ALL-UNNAMED"); done
 exec java "${FLAGS[@]}" \
+  -Dsun.stdout.encoding=UTF-8 -Dsun.stderr.encoding=UTF-8 \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${JVM_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
