@@ -1278,23 +1278,12 @@ class PipelineSpec extends AnyFunSuite {
 
   test("simhashPairs with caller-supplied n skips the sizing count job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-    // the event bus is async: drain it (reflectively — listenerBus is
-    // private[spark]) so assertions see every event that was emitted
-    def drainBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-        .invoke(sc)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-        .map(_.invoke(bus, java.lang.Long.valueOf(30000L)))
-        .getOrElse(bus.getClass.getMethod("waitUntilEmpty").invoke(bus))
-    }
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val l = new SparkListener {
       override def onJobEnd(e: SparkListenerJobEnd): Unit = seen.add(e.jobId)
     }
     docs.count() // resolve the lazy table (schema-inference jobs) first
-    drainBus() // quiesce stragglers from prior tests
+    SparkTestSession.drainListenerBus() // quiesce stragglers from prior tests
     spark.sparkContext.addSparkListener(l)
     try {
       // construction with n supplied must run ZERO jobs (the default
@@ -1305,14 +1294,14 @@ class PipelineSpec extends AnyFunSuite {
       // a sizing count() would have emitted (RDD count = exactly ONE
       // job; a Dataset count under AQE runs per-stage jobs)
       spark.sparkContext.parallelize(Seq(1)).count()
-      drainBus()
+      SparkTestSession.drainListenerBus()
       assert(seen.size == 1,
         s"expected only the barrier job after n-supplied construction, " +
           s"saw ${seen.size}")
       seen.clear()
       Dedup.simhashPairs(docs, "doc_id", "text", 3)
       spark.sparkContext.parallelize(Seq(1)).count()
-      drainBus()
+      SparkTestSession.drainListenerBus()
       assert(seen.size >= 2,
         "default construction should have run the sizing count job")
     } finally spark.sparkContext.removeSparkListener(l)

@@ -5,6 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = Engine.session(cores = 4, appName = "graft-test")
+
+  /** Wait until the listener bus has delivered every event posted so
+    * far: it is asynchronous, so a listener's counts are only complete
+    * after this. Reflective because `listenerBus` is private[spark]. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get
+      .invoke(sc)
+    bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
+      .map(_.invoke(bus, java.lang.Long.valueOf(30000L)))
+      .getOrElse(bus.getClass.getMethod("waitUntilEmpty").invoke(bus))
+  }
 }
 
 /** Smoke: every registered query builds a plan and executes at sf0.001.
