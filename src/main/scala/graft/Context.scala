@@ -12,12 +12,13 @@ import org.apache.spark.sql.types.StructType
   * pipeline stays in charge. Nothing in the library requires going
   * through this facade; it is the porting convenience layer.
   *
-  * Function registration (`register_udf` family) happens once at
-  * construction: the SQL-UDF parity layer plus every sketch/pipeline
-  * aggregate, so `ctx.sql` can use graft_* functions immediately.
+  * The session must carry `graft.GraftExtensions`, which injects every
+  * graft_* function and plan rule (the `register_udf` family); the
+  * constructor adds only the SQL-UDF parity layer
+  * (`GraftFunctions.registerSql`), which has no injected twin.
   */
-class GraftContext(val spark: SparkSession) {
-  GraftFunctionsRegistry.registerAll(spark)
+class GraftContext private (val spark: SparkSession) {
+  functions.GraftFunctions.registerSql(spark)
 
   // ── SessionContext::sql / sql_with_options ──────────────────────────
   def sql(query: String): DataFrame = spark.sql(query)
@@ -124,20 +125,21 @@ object GraftContext {
   def apply(cores: Int = Runtime.getRuntime.availableProcessors()): GraftContext =
     new GraftContext(Engine.session(cores, appName = "graft-ctx"))
 
-  /** Wrap an existing session (reference `SessionContext::new_with_state`). */
-  def apply(spark: SparkSession): GraftContext = new GraftContext(spark)
-}
-
-/** One-call registration of every graft function family into a session —
-  * the `register_udf/udaf/udwf` surface as a single idempotent hook. */
-object GraftFunctionsRegistry {
-  def registerAll(spark: SparkSession): Unit = {
-    functions.GraftFunctions.registerSql(spark)
-    functions.Sketches.register(spark)
-    functions.CountMin.register(spark)
-    functions.Bloom.register(spark)
-    functions.Theta.register(spark)
-    functions.GraftWindowFunctions.register(spark)
+  /** Wrap an existing session (reference `SessionContext::new_with_state`).
+    * Both the session's and its SparkContext's `spark.sql.extensions`
+    * must name `graft.GraftExtensions`: nothing else adds the graft_*
+    * functions or plan rules to a session, and Spark applies the
+    * extensions of the context's conf. */
+  def apply(spark: SparkSession): GraftContext = {
+    val ext = classOf[GraftExtensions].getName
+    val confs = Seq(spark.conf.getOption("spark.sql.extensions"),
+      spark.sparkContext.getConf.getOption("spark.sql.extensions"))
+      .map(_.getOrElse(""))
+    require(confs.forall(_.split(",").map(_.trim).contains(ext)),
+      s"GraftContext needs a session built with spark.sql.extensions=$ext " +
+        s"(session: '${confs(0)}', SparkContext: '${confs(1)}'); use " +
+        "Engine.session or GraftContext()")
+    new GraftContext(spark)
   }
 }
 

@@ -24,8 +24,14 @@ object Engine {
   /** The one session factory: Verify, Bench and every test suite build
     * their sessions here, with `overrides` layered over the defaults
     * below (a key in `overrides` replaces the default). Library
-    * extensions are on by default through `spark.sql.extensions`; the
-    * override `"spark.sql.extensions" -> ""` turns them off.
+    * extensions are on by default through `spark.sql.extensions`, and
+    * GraftExtensions is the only way graft code enters a session: the
+    * override `"spark.sql.extensions" -> ""` leaves a session with no
+    * graft_* function, no TopK fusion and no SmallSort. It takes effect
+    * only in the session that starts the JVM's SparkContext: Spark
+    * applies the extensions named in the context's conf, so a later
+    * session on a running context gets them whatever its overrides say
+    * (and GraftContext(spark) refuses it, since its conf asks for none).
     *
     * `spark.sql.codegen.cache.maxEntries` is pinned to 1000 because
     * Spark's default of 100 is smaller than the engine's working set of

@@ -9,22 +9,21 @@ import graft.plans.{SmallSort, TopKAggregationRule, TopKAggStrategy}
 
 /** Library entry point for `spark.sql.extensions=graft.GraftExtensions`
   * (reference analogue: SessionContext::register_udf* —
-  * datafusion/core/src/execution/context/mod.rs:979-1002). Injects the
-  * custom Catalyst expressions into every session built with these
-  * extensions; the SQL-UDF parity layer (GraftFunctions.registerSql) is
-  * session-scoped and complements this. Also injects the engine's plan
-  * rules: the TopK aggregation fusion (optimizer rule + planner
-  * strategy) and SmallSort, an AQE query-stage preparation rule that
-  * sorts inputs under autoBroadcastJoinThreshold in one task instead of
-  * range-shuffling them (it runs only with AQE on). */
+  * datafusion/core/src/execution/context/mod.rs:979-1002), and the only
+  * way graft functions and plan rules enter a session. Injects the
+  * custom Catalyst expressions from each family's `builders` table, the
+  * TopK aggregation fusion (optimizer rule + planner strategy) and
+  * SmallSort, an AQE query-stage preparation rule that sorts inputs
+  * under autoBroadcastJoinThreshold in one task instead of
+  * range-shuffling them (it runs only with AQE on). The SQL-UDF parity
+  * layer (GraftFunctions.registerSql, which GraftContext runs) is the
+  * one session-scoped addition; it has no injected twin. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // gcd/lcm, the codegen'd sketch/pipeline kernels, the sketch-aggregate
     // tier (binary-state TypedImperativeAggregates + their scalar
-    // companions) and the UDWF tier (ewma fold, GROUPS frame). The tables
-    // are shared with each object's register(), so extension-built
-    // sessions get the same SQL surface as GraftFunctionsRegistry.
-    // registerAll ones and argument validation stays in one place.
+    // companions) and the UDWF tier (ewma fold, GROUPS frame); argument
+    // validation lives in each family's builders table.
     (NumberTheory.builders ++ Sketches.scalarBuilders ++
       Sketches.aggregateBuilders ++ GraftWindowFunctions.builders).foreach {
       case (name, clazz, builder) =>

@@ -165,8 +165,7 @@ object Bloom {
   def contains(sketch: Column, key: Column): Column =
     call_function("graft_bloom_contains", sketch, key)
 
-  /** (name, impl class, builder) — shared by register() and
-    * GraftExtensions. */
+  /** (name, impl class, builder): GraftExtensions injects these. */
   val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_bloom", classOf[BloomFilterAgg].getName,
       Theta.arity("graft_bloom", 3) { exprs =>
@@ -184,7 +183,4 @@ object Bloom {
     ("graft_bloom_contains", classOf[BloomContains].getName,
       Theta.arity("graft_bloom_contains", 2)(
         exprs => BloomContains(exprs(0), exprs(1)))))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Sketches.registerMissing(spark, builders)
 }

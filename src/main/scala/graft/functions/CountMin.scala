@@ -133,8 +133,7 @@ object CountMin {
   def estimate(sketch: Column, key: Column): Column =
     call_function("graft_count_min_estimate", sketch, key)
 
-  /** (name, impl class, builder) — shared by register() and
-    * GraftExtensions. */
+  /** (name, impl class, builder): GraftExtensions injects these. */
   val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_count_min", classOf[CountMinSketchAgg].getName,
       Theta.arity("graft_count_min", 3) { exprs =>
@@ -154,7 +153,4 @@ object CountMin {
     ("graft_count_min_estimate", classOf[CountMinEstimate].getName,
       Theta.arity("graft_count_min_estimate", 2)(
         exprs => CountMinEstimate(exprs(0), exprs(1)))))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Sketches.registerMissing(spark, builders)
 }

@@ -190,7 +190,8 @@ object GraftFunctions {
     "to_unixtime" -> """CREATE OR REPLACE TEMPORARY FUNCTION to_unixtime(
       t TIMESTAMP) RETURNS BIGINT RETURN unix_timestamp(t)""")
     .foreach { case (name, ddl) =>
-      // once per session registry, like Sketches.registerMissing
+      // once per session registry: replacing an existing function only
+      // logs Spark's re-registration WARN
       if (!spark.sessionState.functionRegistry.functionExists(
           org.apache.spark.sql.catalyst.FunctionIdentifier(name))) spark.sql(ddl)
     }

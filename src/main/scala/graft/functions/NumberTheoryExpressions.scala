@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Spark has no built-in equivalents. Implemented as native Catalyst
   * binary expressions with `doGenCode` so they stay inside whole-stage
   * codegen (preference order per SURVEY.md §7: custom Expression beats any
-  * UDF). Inputs are cast to LongType at registration; registered in the
-  * session FunctionRegistry and reached from the Column API via
-  * `call_function` (Spark 4's Column no longer exposes catalyst exprs).
+  * UDF). Inputs are cast to LongType by the builder; GraftExtensions
+  * injects both into the session FunctionRegistry, and the Column API
+  * reaches them via `call_function` (Spark 4's Column no longer exposes
+  * catalyst exprs).
   */
 case class Gcd(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = LongType
@@ -80,7 +81,7 @@ case class Lcm(left: Expression, right: Expression) extends BinaryExpression {
 }
 
 object NumberTheory {
-  /** Requires `register(spark)` (Engine.session does it). */
+  /** Resolve through GraftExtensions, which injects [[builders]]. */
   def gcd(a: Column, b: Column): Column = call_function("graft_gcd", a, b)
   def lcm(a: Column, b: Column): Column = call_function("graft_lcm", a, b)
 
@@ -89,6 +90,4 @@ object NumberTheory {
       exprs => Gcd(Cast(exprs(0), LongType), Cast(exprs(1), LongType))),
     ("graft_lcm", classOf[Lcm].getName,
       exprs => Lcm(Cast(exprs(0), LongType), Cast(exprs(1), LongType))))
-
-  def register(spark: SparkSession): Unit = Sketches.registerMissing(spark, builders)
 }

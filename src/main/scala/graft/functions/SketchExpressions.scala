@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -1171,9 +1171,8 @@ case class GatherSum(left: Expression, right: Expression)
 }
 
 object Sketches {
-  /** Every binary-state sketch aggregate family's (name, class, builder)
-    * — GraftExtensions injects these so extension-built sessions have
-    * the same SQL surface as GraftFunctionsRegistry.registerAll ones. */
+  /** Every binary-state sketch aggregate family's (name, class, builder):
+    * GraftExtensions injects these. */
   def aggregateBuilders: Seq[(String, String,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.expressions.Expression)] =
@@ -1243,7 +1242,7 @@ object Sketches {
       org.apache.spark.sql.functions.typedlit(params))
 
   /** Every scalar kernel's (name, class, builder): GraftExtensions
-    * injects these, [[register]] adds them to other sessions. */
+    * injects these. */
   val scalarBuilders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_simhash63", classOf[SimHash63].getName,
       exprs => SimHash63(exprs.head)),
@@ -1280,20 +1279,4 @@ object Sketches {
     // table function (UDTF analogue): custom Generator
     ("graft_ngrams", classOf[NGramsGenerator].getName,
       exprs => NGramsGenerator(exprs(0), exprs(1))))
-
-  /** Register each (name, class, builder) the session's function registry
-    * does not have yet. Extension-built sessions already carry the
-    * graft_* functions, and callers register on every query build:
-    * replacing an existing entry would only log Spark's re-registration
-    * WARN. */
-  private[graft] def registerMissing(spark: SparkSession,
-      builders: Seq[(String, String, Seq[Expression] => Expression)]): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    builders.foreach { case (name, _, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = registerMissing(spark, scalarBuilders)
 }

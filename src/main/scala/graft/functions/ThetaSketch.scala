@@ -248,8 +248,7 @@ object Theta {
       build(exprs)
     }
 
-  /** (name, impl class, builder) — one source of truth for both the
-    * session-scoped register() and the GraftExtensions injection. */
+  /** (name, impl class, builder): GraftExtensions injects these. */
   val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_theta_sketch", classOf[ThetaSketchAgg].getName,
       arity("graft_theta_sketch", 2) { exprs =>
@@ -268,7 +267,4 @@ object Theta {
       arity("graft_theta_union", 2)(e => ThetaUnion(e(0), e(1)))),
     ("graft_theta_intersect", classOf[ThetaIntersect].getName,
       arity("graft_theta_intersect", 2)(e => ThetaIntersect(e(0), e(1)))))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Sketches.registerMissing(spark, builders)
 }

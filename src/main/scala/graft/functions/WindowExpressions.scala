@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{
   Add, AggregateWindowFunction, And, ArrayMax, ArrayMin, AttributeReference,
   Cast, Concat, CreateArray, CurrentRow, ElementAt, EqualNullSafe, EqualTo,
@@ -313,7 +313,7 @@ case class GroupsEdge(valueExpr: Expression, keyExpr: Expression,
 }
 
 object GraftWindowFunctions {
-  /** Requires `register(spark)`; use as
+  /** Resolves through GraftExtensions; use as
     * `GraftWindowFunctions.ewma(col, 0.3).over(windowSpec)` with a
     * running ROWS frame (the function fixes its own frame). */
   def ewma(x: Column, alpha: Double): Column =
@@ -387,8 +387,7 @@ object GraftWindowFunctions {
     s.cast("double").divide(n.cast("double"))
   }
 
-  /** (name, impl class, builder) — shared by register() and
-    * GraftExtensions. */
+  /** (name, impl class, builder): GraftExtensions injects these. */
   val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_ewma", classOf[Ewma].getName,
       Theta.arity("graft_ewma", 2)(e => Ewma(e(0), e(1)))),
@@ -406,7 +405,4 @@ object GraftWindowFunctions {
     ("graft_groups_last", classOf[GroupsEdge].getName,
       Theta.arity("graft_groups_last", 3)(e =>
         GroupsEdge(e(0), e(1), e(2), isFirst = false))))
-
-  def register(spark: SparkSession): Unit =
-    Sketches.registerMissing(spark, builders)
 }

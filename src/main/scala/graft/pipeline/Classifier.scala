@@ -90,7 +90,6 @@ object Classifier {
   def featurizeBinary(
       train: DataFrame, textCol: String, labelCol: String, d: Int,
       includeBigrams: Boolean = true): DataFrame = {
-    graft.functions.Sketches.register(train.sparkSession)
     train.select(col(labelCol).cast("int").as("y"),
       buckets(coalesce(col(textCol), lit("")), d, includeBigrams).as("fb"))
   }
@@ -99,7 +98,6 @@ object Classifier {
   def trainLogOddsFeats(
       featsIn: DataFrame, d: Int, alpha: Double = 1.0)
       : (Array[Double], Double) = {
-    graft.functions.Sketches.register(featsIn.sparkSession)
     // label contract ENFORCED, not just documented (r13 ADVICE): the
     // per-class doc counts double as the validation pass — a NULL or
     // out-of-range label would otherwise be silently counted as class 0
@@ -166,7 +164,6 @@ object Classifier {
   def featurizeMulti(
       train: DataFrame, textCol: String, labelCol: String, d: Int,
       includeBigrams: Boolean = true): DataFrame = {
-    graft.functions.Sketches.register(train.sparkSession)
     train.select(col(labelCol).cast("string").as("y"),
       buckets(coalesce(col(textCol), lit("")), d, includeBigrams).as("fb"))
   }
@@ -178,7 +175,6 @@ object Classifier {
       : (Map[String, Array[Double]], Map[String, Double]) = {
     require(classes.nonEmpty && classes.distinct == classes,
       "classes must be non-empty and distinct")
-    graft.functions.Sketches.register(featsIn.sparkSession)
     // the label-validation doc counts prune fb, so this pass stays as
     // cheap as the old direct groupBy over the train frame
     val docRows = featsIn.groupBy(col("y"))
@@ -227,7 +223,6 @@ object Classifier {
     require(classes.nonEmpty && weights.keySet == classes.toSet &&
       priors.keySet == classes.toSet,
       "weights/priors must cover exactly the declared classes")
-    graft.functions.Sketches.register(df.sparkSession)
     val d = weights(classes.head).length
     // d is inferred from the head class, so a ragged matrix from a buggy
     // caller would feed GatherSum indexes computed for that d into
@@ -347,7 +342,6 @@ object Classifier {
   def trainLogisticFixedFeats(
       feats: DataFrame, initWq: Array[Long], initBq: Long,
       iters: Int, lr: Double): (Array[Long], Long) = {
-    graft.functions.Sketches.register(feats.sparkSession)
     val d = initWq.length
     val n = feats.count()
     var wq = initWq.clone()
@@ -424,7 +418,6 @@ object Classifier {
     val d = initWq(classes.head).length
     require(classes.forall(c => initWq(c).length == d),
       s"all per-class init arrays must share length $d")
-    graft.functions.Sketches.register(feats.sparkSession)
     val n = feats.count()
     var wq = classes.map(c => c -> initWq(c).clone()).toMap
     var bq = initBq
@@ -491,7 +484,6 @@ object Classifier {
     val d = wq(classes.head).length
     require(classes.forall(c => wq(c).length == d),
       s"all per-class weight arrays must share length $d")
-    graft.functions.Sketches.register(df.sparkSession)
     val base = df
       .select(col(idCol), coalesce(col(textCol), lit("")).as("__t"))
       .withColumn("__fb", buckets(col("__t"), d, includeBigrams))
@@ -524,7 +516,6 @@ object Classifier {
       df: DataFrame, idCol: String, textCol: String,
       wq: Seq[Long], bq: Long,
       includeBigrams: Boolean = true): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
     val d = wq.length
     df.select(col(idCol), coalesce(col(textCol), lit("")).as("__t"))
       .withColumn("__fb", buckets(col("__t"), d, includeBigrams))
@@ -546,7 +537,6 @@ object Classifier {
       df: DataFrame, idCol: String, textCol: String,
       weights: Seq[Double], bias: Double,
       includeBigrams: Boolean = true): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
     val d = weights.length
     df.select(col(idCol), coalesce(col(textCol), lit("")).as("__t"))
       .withColumn("__fb", buckets(col("__t"), d, includeBigrams))

@@ -39,7 +39,6 @@ object Decontamination {
       n: Int = 13, minHits: Int = 1): DataFrame = {
     require(n >= 1, s"shingle size must be >= 1, got $n")
     require(minHits >= 1, s"minHits must be >= 1, got $minHits")
-    graft.functions.Sketches.register(train.sparkSession)
     val t = shingleHashes(train, idCol, textCol, n)
       .select(col("id").as("doc_id"), col("h"))
     val e = shingleHashes(eval, evalIdCol, evalTextCol, n)
@@ -100,8 +99,6 @@ object Decontamination {
       s"bloomBits must be a positive multiple of 64, got $bloomBits")
     require(bloomHashes >= 1 && bloomHashes <= 16,
       s"bloomHashes must be in 1..16, got $bloomHashes")
-    graft.functions.Sketches.register(train.sparkSession)
-    graft.functions.Bloom.register(train.sparkSession)
     val e = shingleHashes(eval, evalIdCol, evalTextCol, n)
       .select(col("id").as("eval_id"), col("h"))
     // one row, sketch bytes only — a sanctioned driver scalar (same

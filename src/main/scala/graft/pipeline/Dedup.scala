@@ -90,7 +90,6 @@ object Dedup {
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    graft.functions.Sketches.register(df.sparkSession)
     val r = numHashes / bands
     BandJoin.pairs(
       df.select(col(idCol).as("id"),
@@ -253,7 +252,6 @@ object Dedup {
     require(sigLongs >= 1 && sigLongs <= 8,
       s"sigLongs must be in 1..8, got $sigLongs")
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    graft.functions.Sketches.register(df.sparkSession)
     val names = (0 until sigLongs).map(j => s"sig$j")
     val chunksPerLong =
       math.max(1, math.ceil((maxHamming + 1).toDouble / sigLongs).toInt)
@@ -296,7 +294,6 @@ object Dedup {
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, threshold: Double = 0.6): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
     // ONE tokenize+shingle kernel pass (r14 optimization). The r13 plan
     // scanned the input and ran graft_shingles+explode FOUR times — the
     // self-join's two sides plus two per-id count subplans — because
@@ -395,7 +392,6 @@ object Dedup {
     * partition; the agg reduces map-side and the join back streams). */
   private def duplicateWindowOccurrences(
       df: DataFrame, idCol: String, textCol: String, w: Int): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
     import graft.functions.Sketches.dupWindowHashes
     val wins = df
       .select(col(idCol).as("doc_id"),
@@ -469,7 +465,6 @@ object Dedup {
   def cutWithSpans(
       df: DataFrame, idCol: String, textCol: String,
       spans: DataFrame): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
     val spanLists = spans
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("span_start").as("s"),
@@ -526,7 +521,6 @@ object Dedup {
     * all 30 bits). */
   private def portableSigs(df: DataFrame, id: Column, textCol: String,
       names: String*): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
     df.select(id.as("id") +: names.zip(Seq(2654435761L, 2246822519L)).map {
       case (n, m) =>
         graft.functions.Sketches.portableSimhash30(col(textCol), m).as(n)
@@ -624,7 +618,6 @@ object Dedup {
   def minhashSigStore(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, shingleSize: Int = 3): DataFrame = {
-    graft.functions.Sketches.register(df.sparkSession)
     df.select(col(idCol).cast("long").as("id"),
       graft.functions.Sketches.portableMinhash(coalesce(col(textCol),
         lit("")), portableMinhashParams(k, shingleSize)).as("sig"))
@@ -817,7 +810,6 @@ private[pipeline] object BandJoin {
   def store(
       storeSigs: DataFrame, batch: DataFrame, bands: Column, keep: Column,
       useBloom: Boolean, persistSigs: Boolean): DataFrame = {
-    graft.functions.Bloom.register(batch.sparkSession)
     val payload = batch.columns.toSeq.filter(_ != "id")
     val bs = if (persistSigs) Materialize.checkpoint(batch) else batch
     val (bc, keys) = rows(bs, payload, bands)

@@ -56,7 +56,6 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.Sketches.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("nid"), asDouble(col(vecCol)).as("nvec"))
     val q = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qvec"))
     val w = Window.partitionBy(col("qid"))
@@ -126,7 +125,6 @@ object Similarity {
       planes: Int = 16, bandBits: Int = 4, rotations: Int = 3,
       threshold: Double = 0.85, dim: Int = 64): DataFrame = {
     require(planes % bandBits == 0, "planes must be divisible by bandBits")
-    graft.functions.Sketches.register(corpus.sparkSession)
     val bands = planes / bandBits
     val mask = (1L << bandBits) - 1
     val rots = (0 until rotations).map(rot => s"rot$rot")
@@ -153,7 +151,6 @@ object Similarity {
   def exactNearPairs(
       corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    graft.functions.Sketches.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
     c.select(col("id").as("id_a"), col("vec").as("va"))
       .crossJoin(broadcast(c.select(col("id").as("id_b"), col("vec").as("vb"))))
@@ -387,7 +384,6 @@ object Similarity {
   def pqTrain(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, kmeansIters: Int = 0): Seq[Seq[Seq[Double]]] = {
-    graft.functions.Sketches.register(corpus.sparkSession)
     val base = corpus.select(col(idCol).as("id"),
       asDouble(col(vecCol)).as("vec"))
     val sample = base
@@ -436,7 +432,6 @@ object Similarity {
   def pqEncode(
       corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.Sketches.register(corpus.sparkSession)
     corpus.select(col(idCol).as("id"),
       pqCodes(asDouble(col(vecCol)), codebooks).as("codes"))
   }
@@ -539,7 +534,6 @@ object Similarity {
       nCells: Int = 16, nProbe: Int = 4,
       m: Int = 16, k: Int = 64, kmeansIters: Int = 2,
       rerankFactor: Int = 5): DataFrame = {
-    graft.functions.Sketches.register(corpus.sparkSession)
     val base = corpus.select(col(idCol).as("id"),
       asDouble(col(vecCol)).as("vec"))
     val sampled: Seq[Seq[Double]] = base
@@ -612,7 +606,6 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 4, kmeansIters: Int = 0): DataFrame = {
-    graft.functions.Sketches.register(corpus.sparkSession)
     val base = corpus.select(col(idCol).as("id"),
       asDouble(col(vecCol)).as("vec"))
     // deterministic "centroids": nCells corpus vectors by md5-rank

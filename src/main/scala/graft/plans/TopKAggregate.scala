@@ -3,23 +3,27 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, max, min}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, Ascending, Attribute, AttributeReference, BindReferences, Descending,
-  Expression, NamedExpression, NullsFirst, NullsLast, SortOrder,
-  UnsafeProjection, UnsafeRow}
+  Alias, Ascending, Attribute, BindReferences, Descending, Expression,
+  NamedExpression, NullsFirst, NullsLast, SortOrder, UnsafeProjection,
+  UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Complete, Max, Min}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.catalyst.plans.logical.{
-  Aggregate, GlobalLimit, LocalLimit, LogicalPlan, Sort, UnaryNode}
+  Aggregate, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.catalyst.util.{TypeUtils, UnsafeRowUtils}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.catalyst.plans.physical.{
   AllTuples, Distribution, Partitioning, SinglePartition,
   UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.{
+  ArrayType, DataType, DoubleType, FloatType, StructType}
 
 /** TopK aggregation fusion (reference: DataFusion's TopKAggregation
   * physical rule + priority-map aggregate —
@@ -38,7 +42,8 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   * exchange of ≤ k·P slim rows → final priority map), plus a
   * Rule[LogicalPlan] that pattern-matches Limit(Sort(Aggregate)) and
   * fuses — the full custom-operator tier of the architecture, wired via
-  * SparkSessionExtensions or ExperimentalMethods.
+  * SparkSessionExtensions (GraftExtensions). The rule is the only code
+  * that builds the node.
   *
   * Ordering semantics: value descending, NULLS LAST; ties broken by the
   * group columns ascending (NULLS FIRST) — i.e. `ORDER BY m DESC, g`.
@@ -102,8 +107,7 @@ object TopKAggExec {
         if (gc != 0) return gc
         i += 1
       }
-      // Ordering-equal but byte-distinct group keys (e.g. -0.0 vs 0.0
-      // doubles reaching the direct API unnormalized): fall back to the
+      // Ordering-equal but byte-distinct group keys: fall back to the
       // UnsafeRow bytes so this ordering agrees with the HashMap's byte
       // equality — otherwise the TreeSet collapses two live map entries
       // and a group is silently dropped.
@@ -243,7 +247,14 @@ object TopKAggStrategy extends SparkStrategy {
   * `groups :+ value`; when the original result list interleaves (agg
   * before/between group columns) a Project restores the aggregate's
   * exact output order, so positional consumers (UNION, insertInto,
-  * root schema) are unaffected. */
+  * root schema) are unaffected.
+  *
+  * The exec groups by raw UnsafeRow bytes, and NormalizeFloatingNumbers
+  * (which runs after this rule) only normalizes an Aggregate's keys, so
+  * the rule normalizes float/double keys itself (NaN payloads, -0.0 vs
+  * 0.0) in a Project under the node. It declines any other key whose
+  * equality is not byte equality: nested keys that hold floats, and
+  * collated strings ('A' and 'a' are one UTF8_LCASE group). */
 object TopKAggregationRule extends Rule[LogicalPlan] {
   private val MaxK = 100000
 
@@ -297,7 +308,6 @@ object TopKAggregationRule extends Rule[LogicalPlan] {
       case Some(t) => t
       case None => return None
     }
-    val groupCols = pairs.map(_._1).toSeq
     val outGroup = pairs.map(_._2).toSeq
     val outValue = aggAlias.toAttribute
     // primary sort: the agg value — max DESC NULLS LAST or min ASC NULLS
@@ -319,75 +329,55 @@ object TopKAggregationRule extends Rule[LogicalPlan] {
         outGroup.take(tieAttrs.length).map(_.exprId))) return None
     // without full tiebreaks the boundary pick is one valid choice among
     // the tied groups — allowed for a nondeterministic ORDER BY prefix
-    val topk = TopKAggregate(groupCols, aggInput, outGroup, outValue, n,
-      desc, agg.child)
+    val groupCols: Seq[NamedExpression] = pairs.toSeq.map { case (a, _) =>
+      a.dataType match {
+        case DoubleType | FloatType =>
+          Alias(NormalizeNaNAndZero(a), a.name)()
+        case t if floating(t) || !UnsafeRowUtils.isBinaryStable(t) =>
+          return None
+        case _ => a
+      }
+    }
+    val child =
+      if (groupCols.forall(_.isInstanceOf[Attribute])) agg.child
+      else Project((groupCols :+ aggInput).distinct, agg.child)
+    val topk = TopKAggregate(groupCols.map(_.toAttribute), aggInput,
+      outGroup, outValue, n, desc, child)
     // preserve the aggregate's exact output column order for positional
     // consumers (the fused layout is always groups :+ value)
     if (topk.output.map(_.exprId) == agg.output.map(_.exprId)) Some(topk)
-    else Some(org.apache.spark.sql.catalyst.plans.logical.Project(
-      agg.output, topk))
+    else Some(Project(agg.output, topk))
+  }
+
+  private def floating(t: DataType): Boolean = t match {
+    case DoubleType | FloatType => true
+    case ArrayType(e, _) => floating(e)
+    case s: StructType => s.fields.exists(f => floating(f.dataType))
+    case _ => false
   }
 }
 
-/** Library surface + registration. */
+/** Direct API: the plain `groupBy/agg/orderBy/limit` plan, which
+  * TopKAggregationRule (injected by GraftExtensions) fuses. */
 object TopKAgg {
-  /** Append the strategy + fusion rule to a session (idempotent). Also
-    * injectable via GraftExtensions for extension-built sessions. */
-  def register(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(TopKAggStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKAggStrategy
-    if (!exp.extraOptimizations.contains(TopKAggregationRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ TopKAggregationRule
-  }
-
-  /** Direct API: the k groups with the largest max(valueCol), ranked
+  /** The k groups with the largest max(valueCol), ranked
     * (max DESC NULLS LAST, groups ASC). Output: groupCols :+ aggAlias. */
   def topKGroupsByMax(df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int, aggAlias: String = "max_value"): DataFrame =
-    topKGroups(df, groupCols, valueCol, k, aggAlias, desc = true)
+    topKGroups(df, groupCols, max(col(valueCol)).as(aggAlias),
+      col(aggAlias).desc_nulls_last, k)
 
   /** The k groups with the smallest min(valueCol), ranked
     * (min ASC NULLS LAST, groups ASC). */
   def topKGroupsByMin(df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int, aggAlias: String = "min_value"): DataFrame =
-    topKGroups(df, groupCols, valueCol, k, aggAlias, desc = false)
+    topKGroups(df, groupCols, min(col(valueCol)).as(aggAlias),
+      col(aggAlias).asc_nulls_last, k)
 
-  private def topKGroups(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, k: Int, aggAlias: String, desc: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    register(spark)
-    val analyzed = df.queryExecution.analyzed
-    def attr(n: String): Attribute = analyzed.output
-      .find(a => spark.sessionState.conf.resolver(a.name, n))
-      .getOrElse(throw new IllegalArgumentException(s"no column $n"))
-    val gAttrs = groupCols.map(attr)
-    val vAttr = attr(valueCol)
-    val outValue = AttributeReference(aggAlias, vAttr.dataType,
-      nullable = true)()
-    // Group keys are compared as raw UnsafeRow bytes in the exec:
-    // normalize float/double keys (NaN payloads, -0.0 vs 0.0) the same
-    // way Spark's NormalizeFloatingNumbers rule does for groupBy — the
-    // SQL rule path gets this from the optimizer, the direct API must
-    // do it itself.
-    val normPairs: Seq[(NamedExpression, Attribute)] = gAttrs.map { a =>
-      a.dataType match {
-        case org.apache.spark.sql.types.DoubleType |
-             org.apache.spark.sql.types.FloatType =>
-          val al = Alias(
-            org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero(a),
-            a.name)()
-          (al, al.toAttribute)
-        case _ => (a, a)
-      }
-    }
-    val gNorm = normPairs.map(_._2)
-    // explicit Project under the node: scan-level column pruning is
-    // driven by the Project/Filter chain directly above the relation
-    // (PhysicalOperation), which a custom node interrupts
-    val pruned = org.apache.spark.sql.catalyst.plans.logical.Project(
-      (normPairs.map(_._1) :+ (vAttr: NamedExpression)).distinct, analyzed)
-    GraftSqlShim.ofRows(spark,
-      TopKAggregate(gNorm, vAttr, gNorm, outValue, k, desc, pruned))
+  private def topKGroups(df: DataFrame, groupCols: Seq[String], agg: Column,
+      order: Column, k: Int): DataFrame = {
+    require(k > 0, "k must be positive")
+    df.groupBy(groupCols.map(col): _*).agg(agg)
+      .orderBy(order +: groupCols.map(col): _*).limit(k)
   }
 }

@@ -25,7 +25,6 @@ object ExtrasQueries {
       |FROM lineitem
       |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 15)
       |ORDER BY l_orderkey, l_linenumber""") { (s, d) =>
-      Bloom.register(s)
       val sel = Engine.table(s, d, "part")
         .filter(col("p_size") === 15).select(col("p_partkey"))
       val sketch = sel.agg(Bloom.sketch(col("p_partkey"), 1 << 16, 5))
@@ -296,7 +295,6 @@ object ExtrasQueries {
     "agg_countmin" -> Q("""
       |SELECT event_type, count(*) AS est
       |FROM events GROUP BY event_type ORDER BY event_type""") { (s, d) =>
-      graft.functions.CountMin.register(s)
       val ev = Engine.table(s, d, "events")
       val sk = ev.agg(graft.functions.CountMin.sketch(col("event_type"))
         .as("sk"))
@@ -316,7 +314,6 @@ object ExtrasQueries {
     "agg_theta_sketch" -> Q("""
       |SELECT event_type, count(DISTINCT user_id) AS users
       |FROM events GROUP BY event_type ORDER BY event_type""") { (s, d) =>
-      graft.functions.Theta.register(s)
       Engine.table(s, d, "events")
         .groupBy(col("event_type"))
         .agg(graft.functions.Theta.estimate(
@@ -341,7 +338,6 @@ object ExtrasQueries {
       |     SELECT user_id FROM events WHERE event_type = 'purchase'))
       |    AS both_users""") { (s, d) =>
       import graft.functions.Theta
-      Theta.register(s)
       Engine.table(s, d, "events")
         .agg(
           Theta.sketch(when(col("event_type") === "click", col("user_id")))

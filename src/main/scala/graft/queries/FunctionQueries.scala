@@ -171,7 +171,6 @@ object FunctionQueries {
       |       lcm(p_partkey % 10 + 1, 6)           AS l,
       |       round(pi(), 6)                       AS pi_
       |FROM part ORDER BY p_partkey""") { (s, d) =>
-      NumberTheory.register(s)
       Engine.table(s, d, "part")
         .select(col("p_partkey"),
           abs(col("p_retailprice") - 1000.0).as("ab"),

@@ -288,7 +288,6 @@ object OperatorQueries {
       |SELECT source, count(*) AS n_docs, true AS sig_equals_union_sig
       |FROM documents GROUP BY source ORDER BY source""") { (s, d) =>
       val k = 32
-      graft.functions.Sketches.register(s)
       val docs = Engine.table(s, d, "documents")
       val viaUdaf = docs
         .select(col("source"),

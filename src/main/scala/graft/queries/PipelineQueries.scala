@@ -1538,7 +1538,6 @@ object PipelineQueries {
       |            ELSE 'tail' END AS pred,
       |       bucket
       |FROM scores ORDER BY doc_id""") { (s, d) =>
-      graft.functions.Sketches.register(s)
       val docs = Engine.table(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val classes = Seq("head", "middle", "tail")
@@ -1579,7 +1578,6 @@ object PipelineQueries {
     //    "Quality — LM distillation"). ─────────────────────────────────
     "pipe_quality_distill_refined" -> Q(
         distillRefineSqlDuck(iters = 5, lr = "0.05")) { (s, d) =>
-      graft.functions.Sketches.register(s)
       val docs = Engine.table(s, d, "documents")
         .select(col("doc_id"), col("text"))
       val classes = Seq("head", "middle", "tail")
@@ -1679,7 +1677,6 @@ object PipelineQueries {
       |CROSS JOIN prior
       |WHERE f.doc_id % 2 = 1
       |ORDER BY f.doc_id""") { (s, d) =>
-      graft.functions.Sketches.register(s)
       val docs = Engine.table(s, d, "documents")
       // label coalesces text like the oracle's ws CTE (r13 ADVICE):
       // NULL text must yield label 0 on BOTH engines, not a NULL label
@@ -1709,7 +1706,6 @@ object PipelineQueries {
     //    values can hit them) round away from zero on both engines ─────
     "pipe_text_classifier_sgd" -> Q(
       classifierSgdSqlDuck(10, "CAST(0.05 AS DOUBLE)")) { (s, d) =>
-      graft.functions.Sketches.register(s)
       val docs = Engine.table(s, d, "documents")
       // same NULL-text → label 0 convention as the NB query above
       val labeled = docs.withColumn("label",
@@ -1786,7 +1782,6 @@ object PipelineQueries {
       |       max_run
       |FROM w JOIN max_run ON w.doc_id = max_run.doc_id
       |ORDER BY w.doc_id""") { (s, d) =>
-      graft.functions.Sketches.register(s)
       Engine.table(s, d, "documents")
         .select(col("doc_id"),
           TextAnalysis.dupWordFrac(col("text")).as("dup_word_frac"),
@@ -1814,7 +1809,6 @@ object PipelineQueries {
       |         + 0.000000001, 4) AS quality,
       |       md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
       |FROM documents ORDER BY doc_id""") { (s, d) =>
-      graft.functions.Sketches.register(s)
       Engine.table(s, d, "documents")
         .select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
@@ -1843,7 +1837,6 @@ object PipelineQueries {
       |       WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END AS predicted,
       |  CAST(greatest(s_en, s_de, s_es, s_fr, s_zh) AS BIGINT) AS score
       |FROM s ORDER BY doc_id""") { (s, d) =>
-      graft.functions.Sketches.register(s)
       Engine.table(s, d, "documents")
         .select(col("doc_id"), col("lang").as("actual"),
           TextAnalysis.langId(col("text")).as("lid"))
@@ -1879,7 +1872,6 @@ object PipelineQueries {
       |                         w -> w <> '') AS ws
       |      FROM documents)
       |ORDER BY doc_id""") { (s, d) =>
-      graft.functions.Sketches.register(s)
       Engine.table(s, d, "documents")
         .select(col("doc_id"), col("text"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
@@ -1913,7 +1905,6 @@ object PipelineQueries {
       |                         w -> w <> '') AS ws
       |      FROM documents)
       |ORDER BY doc_id""") { (s, d) =>
-      graft.functions.Sketches.register(s)
       Engine.table(s, d, "documents")
         .select(col("doc_id"),
           TextAnalysis.fingerprintPortable(col("text")).as("fp"))
@@ -1949,7 +1940,6 @@ object PipelineQueries {
       |SELECT doc_id, unnest(sh) AS shingle
       |FROM sh0 ORDER BY doc_id, shingle""") { (s, d) =>
       Engine.registerAll(s, d)
-      graft.functions.Sketches.register(s)
       s.sql("""SELECT doc_id, shingle FROM documents
               |LATERAL VIEW graft_ngrams(text, 3) t AS pos, shingle
               |WHERE doc_id < 50 ORDER BY doc_id, shingle""".stripMargin)

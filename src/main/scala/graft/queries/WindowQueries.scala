@@ -259,7 +259,6 @@ object WindowQueries {
       |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY dr
       |             RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)
       |ORDER BY o_orderkey""") { (s, d) =>
-      GraftWindowFunctions.register(s)
       val w = Window.partitionBy(col("o_orderstatus"))
         .orderBy(col("o_orderpriority"))
       Engine.table(s, d, "orders")
@@ -288,7 +287,6 @@ object WindowQueries {
       |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY dr
       |             RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)
       |ORDER BY o_orderkey""") { (s, d) =>
-      GraftWindowFunctions.register(s)
       val w = Window.partitionBy(col("o_orderstatus"))
         .orderBy(col("o_orderpriority"))
       Engine.table(s, d, "orders")
@@ -322,7 +320,6 @@ object WindowQueries {
       |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY dr
       |             RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)
       |ORDER BY o_orderkey""") { (s, d) =>
-      GraftWindowFunctions.register(s)
       val w = Window.partitionBy(col("o_orderstatus"))
         .orderBy(col("o_orderpriority"))
       Engine.table(s, d, "orders")
@@ -350,7 +347,6 @@ object WindowQueries {
       |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY dr
       |             RANGE BETWEEN 1 PRECEDING AND 2 FOLLOWING)
       |ORDER BY o_orderkey""") { (s, d) =>
-      GraftWindowFunctions.register(s)
       // the three windowed passes land in their own projections (r14):
       // the single-Column groupsSumBetween references its asc-window
       // sums twice (null test + coalesce), and Spark's window
@@ -400,7 +396,6 @@ object WindowQueries {
       |                 ROWS UNBOUNDED PRECEDING),
       |         (acc, x) -> 0.3*x + (1.0-0.3)*acc) AS ewma
       |FROM lineitem ORDER BY l_orderkey, l_linenumber""") { (s, d) =>
-      GraftWindowFunctions.register(s)
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_linenumber"), col("l_quantity"))
       Engine.table(s, d, "lineitem")

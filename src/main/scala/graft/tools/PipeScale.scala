@@ -338,7 +338,6 @@ object PipeScale {
     def labeled(df: DataFrame): DataFrame = df.withColumn("label",
       (size(filter(split(coalesce(col("text"), lit("")), "\\s+"),
         t => t === "spark")) >= 2).cast("int"))
-    graft.functions.Sketches.register(spark)
     val (w1, b1) = Classifier.trainLogOdds(labeled(docs), "text", "label",
       d = 1024)
     val score1 = Classifier.score(docs, "doc_id", "text", w1.toSeq, b1)

@@ -1,18 +1,11 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-/** Minimal bridge into `private[sql]` Spark internals: build a DataFrame
-  * from a custom LogicalPlan (needed by graft's custom operators, e.g.
-  * the TopK-aggregation node) and append experimental rules/strategies.
-  * Lives in the org.apache.spark.sql package solely for access; contains
-  * no logic.
+/** Minimal bridge into `private[sql]` Spark internals, in the
+  * org.apache.spark.sql package solely for access; contains no logic.
+  * Custom plan nodes do not come through here: the rules that
+  * GraftExtensions injects build them inside the optimizer.
   */
 object GraftSqlShim {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(
-      spark.asInstanceOf[classic.SparkSession], plan)
-
   /** Release the block-manager storage behind a localCheckpoint'd
     * Dataset (Dataset.unpersist only covers CacheManager entries, not
     * checkpoint RDD blocks). Matches the ROOT plan only, so passing a

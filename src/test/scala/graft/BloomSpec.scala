@@ -12,7 +12,6 @@ class BloomSpec extends AnyFunSuite {
 
   private def sketchOf(ids: Seq[Long], parts: Int): Array[Byte] = {
     import spark.implicits._
-    Bloom.register(spark)
     ids.toDF("id").repartition(parts)
       .agg(Bloom.sketch(col("id"), 1 << 14, 5))
       .head().getAs[Array[Byte]](0)
@@ -47,7 +46,6 @@ class BloomSpec extends AnyFunSuite {
 
   test("a sketch built over INT keys matches BIGINT probes (and back)") {
     import spark.implicits._
-    Bloom.register(spark)
     val intSketch = (1 to 300).toDF("id")
       .agg(Bloom.sketch(col("id"), 1 << 14, 5)).head().getAs[Array[Byte]](0)
     val missesWide = (1L to 300L).toDF("id")
@@ -60,7 +58,6 @@ class BloomSpec extends AnyFunSuite {
 
   test("garbage binary input fails loudly, not with wrong answers") {
     import spark.implicits._
-    Bloom.register(spark)
     val err = intercept[Exception] {
       Seq(1L).toDF("id")
         .select(Bloom.contains(lit(Array[Byte](1, 2, 3)), col("id")))
@@ -71,7 +68,6 @@ class BloomSpec extends AnyFunSuite {
 
   test("SQL registration works end to end") {
     import spark.implicits._
-    Bloom.register(spark)
     Seq(1L, 2L, 3L).toDF("id").createOrReplaceTempView("bloom_in")
     val bytes = spark.sql(
       "SELECT graft_bloom(id, 6400, 5) FROM bloom_in")

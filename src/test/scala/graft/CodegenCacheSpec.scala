@@ -26,24 +26,8 @@ class CodegenCacheSpec extends AnyFunSuite {
   }
 
   test("Engine.session is the only SparkSession builder in src/main") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"run from the repo root: no $root under ${sys.props("user.dir")}")
-    val factory = root.resolve("graft/Engine.scala")
-    val builder = raw"SparkSession\s*\.\s*builder".r
-    val offenders = {
-      import scala.jdk.CollectionConverters._
-      val files = java.nio.file.Files.walk(root)
-      try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
-        .filter(_ != factory)
-        .flatMap { f =>
-          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-          builder.findAllMatchIn(text).map { m =>
-            s"$f:${text.take(m.start).count(_ == '\n') + 1}"
-          }
-        }.toList.sorted
-      finally files.close()
-    }
+    val offenders = MainSources.matchesOutside(
+      raw"SparkSession\s*\.\s*builder".r, "graft/Engine.scala")
     assert(offenders.isEmpty,
       s"${offenders.size} SparkSession builders outside Engine.session: " +
         offenders.mkString(", "))

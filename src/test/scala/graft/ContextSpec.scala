@@ -1,6 +1,7 @@
 package graft
 
 import graft.DataFrameOps._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,6 +33,24 @@ class ContextSpec extends AnyFunSuite {
       "SELECT graft_theta_estimate(graft_theta_sketch(n_nationkey, 64)) FROM nation")
       .head().getLong(0)
     assert(est == 25)
+  }
+
+  test("GraftContext(spark) rejects a session without GraftExtensions") {
+    val prior = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      // the session's conf asks for no extensions
+      val plain = Engine.session(cores = 4, appName = "graft-plain",
+        overrides = Map("spark.sql.extensions" -> ""))
+      val err = intercept[IllegalArgumentException](GraftContext(plain))
+      assert(err.getMessage.contains("graft.GraftExtensions"), err.getMessage)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prior.foreach(SparkSession.setDefaultSession)
+      prior.foreach(SparkSession.setActiveSession)
+    }
   }
 
   test("read/copyTo round trips csv, json, parquet, arrow") {

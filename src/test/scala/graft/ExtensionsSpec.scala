@@ -1,11 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions wires the custom expressions into any session built
-  * with spark.sql.extensions=graft.GraftExtensions. */
+import graft.functions.{GraftWindowFunctions, NumberTheory, Sketches}
+
+/** GraftExtensions wires the custom expressions and plan rules into any
+  * session built with spark.sql.extensions=graft.GraftExtensions, and
+  * nothing else adds them to a session. */
 class ExtensionsSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
 
   test("extension-injected functions resolve in SQL") {
     // force a fresh session so spark.sql.extensions applies to a new
@@ -15,6 +20,13 @@ class ExtensionsSpec extends AnyFunSuite {
     SparkSession.clearDefaultSession()
     val s = Engine.session(cores = 4, appName = "graft-ext")
     try {
+      val names = (NumberTheory.builders ++ Sketches.scalarBuilders ++
+        Sketches.aggregateBuilders ++ GraftWindowFunctions.builders).map(_._1)
+      val missing = names.filterNot(n =>
+        s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+      assert(names.nonEmpty && names.distinct == names && missing.isEmpty,
+        s"${missing.size} of ${names.size} injected names do not resolve: " +
+          missing.mkString(", "))
       val row = s.sql(
         "SELECT graft_gcd(12, 18) AS g, graft_lcm(4, 6) AS l").head()
       assert(row.getLong(0) == 6L && row.getLong(1) == 12L)
@@ -45,5 +57,24 @@ class ExtensionsSpec extends AnyFunSuite {
       prior.foreach(SparkSession.setDefaultSession)
       prior.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("GraftExtensions is the only registration path in src/main") {
+    val offenders = MainSources.matchesOutside(
+      ("createOrReplaceTempFunction|registerFunction|" +
+        "extraOptimizations|extraStrategies").r,
+      "graft/GraftExtensions.scala")
+    assert(offenders.isEmpty,
+      s"${offenders.size} function/rule registrations outside " +
+        "GraftExtensions: " + offenders.mkString(", "))
+  }
+
+  test("building a query adds no session-scoped rule or strategy") {
+    SparkEntry.all("topk_aggregation").build(spark, "/root/testdata/sf0.001")
+      .collect()
+    assert(spark.experimental.extraOptimizations.isEmpty,
+      spark.experimental.extraOptimizations.mkString(", "))
+    assert(spark.experimental.extraStrategies.isEmpty,
+      spark.experimental.extraStrategies.mkString(", "))
   }
 }

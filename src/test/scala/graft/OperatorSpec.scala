@@ -13,7 +13,6 @@ class OperatorSpec extends AnyFunSuite {
   test("GROUPS frame function matches the dense_rank emulation on edges") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftWindowFunctions.register(spark)
     // edge battery: NULL keys (one peer group, sorts first), NULL values
     // (skipped by sum; all-null group still counts as a group), singleton
     // and multi-row peer groups, two partitions, k ∈ {0, 1, 3}
@@ -54,7 +53,6 @@ class OperatorSpec extends AnyFunSuite {
   test("GROUPS min/max match the dense_rank emulation on edges") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftWindowFunctions.register(spark)
     val rows = Seq[(String, String, java.lang.Long)](
       ("p1", null, 10L), ("p1", null, null),
       ("p1", "a", 1L), ("p1", "a", 2L),
@@ -89,7 +87,6 @@ class OperatorSpec extends AnyFunSuite {
   test("two-sided GROUPS frame matches the dense_rank emulation on edges") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftWindowFunctions.register(spark)
     val rows = Seq[(String, String, java.lang.Long)](
       ("p1", null, 10L), ("p1", null, null),
       ("p1", "a", 1L), ("p1", "a", 2L),
@@ -120,9 +117,8 @@ class OperatorSpec extends AnyFunSuite {
 
   test("GROUPS frame function is usable from SQL via extensions") {
     // the injected builder path: the shared test session is built with
-    // GraftExtensions, so name resolution must go through injectFunction
-    // (no session-scoped register() here — that would mask a broken
-    // injection)
+    // GraftExtensions, and injectFunction is the only way a graft_* name
+    // reaches a session
     val out = spark.sql("""
       SELECT g, graft_groups_sum(v, g, 1)
                OVER (ORDER BY g) AS s
@@ -177,7 +173,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("codegen SimHash63 == interpreted HOF simhash, bit for bit") {
-    graft.functions.Sketches.register(spark)
     val both = Engine.table(spark, sf, "documents")
       .select(col("doc_id"), Dedup.tokenHashes(col("text")).as("hs"))
       .select(col("doc_id"),
@@ -188,7 +183,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("codegen Shingles == interpreted HOF shingles, element for element") {
-    graft.functions.Sketches.register(spark)
     for (n <- Seq(1, 2, 3, 5)) {
       val diff = Engine.table(spark, sf, "documents")
         .select(col("doc_id"),
@@ -210,7 +204,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("count-min sketch: estimate >= exact, partition-independent") {
     import graft.functions.CountMin
-    CountMin.register(spark)
     val ev = Engine.table(spark, sf, "events")
     val exact = ev.groupBy(col("user_id")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -239,7 +232,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("graft_ngrams generator == posexplode of the scalar shingles") {
-    graft.functions.Sketches.register(spark)
     Engine.registerAll(spark, sf)
     val viaUdtf = spark.sql("""
       SELECT doc_id, pos, shingle FROM documents
@@ -255,7 +247,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("codegen langId/rolling fingerprints == interpreted HOF specs") {
     import graft.pipeline.TextAnalysis
-    graft.functions.Sketches.register(spark)
     val docs5 = Engine.table(spark, sf, "documents")
     val diff = docs5.select(col("doc_id"),
         TextAnalysis.langId(col("text")).as("fast"),
@@ -288,7 +279,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("group minhash aggregate == per-position min over row signatures") {
     val k = 16
-    graft.functions.Sketches.register(spark)
     val sigs = Engine.table(spark, sf, "documents")
       .select(col("source"),
         Dedup.minhashSignature(Dedup.shingles(col("text"), 3), k).as("sig"))
@@ -307,7 +297,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("codegen CosineSim == interpreted HOF cosine, bit for bit") {
     import graft.pipeline.Similarity
-    graft.functions.Sketches.register(spark)
     val e = Engine.table(spark, sf, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val pairs = e.select(col("vec_id").as("ida"), col("v").as("va"))
@@ -334,7 +323,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("codegen HyperplaneSignature == interpreted HOF lshSignature") {
     import graft.pipeline.Similarity
-    graft.functions.Sketches.register(spark)
     val diff = Engine.table(spark, sf, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -347,7 +335,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("codegen MinHash64 == interpreted HOF minhash, bit for bit") {
-    graft.functions.Sketches.register(spark)
     val k = 32
     val both = Engine.table(spark, sf, "documents")
       .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
@@ -414,7 +401,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("Ewma UDWF == driver-side fold, bit for bit, nulls carried") {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftWindowFunctions.register(spark)
     import spark.implicits._
     val rows = Seq((1L, 1, Some(10.0)), (1L, 2, None), (1L, 3, Some(4.0)),
       (1L, 4, Some(7.5)), (2L, 1, Some(-3.0)), (2L, 2, Some(0.0)),

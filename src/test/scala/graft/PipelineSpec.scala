@@ -109,7 +109,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("portable MinHash kernel is bit-identical to its HOF spec") {
-    graft.functions.Sketches.register(spark)
     val rows = docs.select(
         graft.functions.Sketches.portableMinhash(col("text"),
           Dedup.portableMinhashParams(16, 3)).as("k"),
@@ -303,7 +302,6 @@ class PipelineSpec extends AnyFunSuite {
   test("LM distillation: multiclass hashed classifier learns the " +
       "perplexity bucket; weights match brute force bit-for-bit") {
     import graft.pipeline.{Classifier, TextAnalysis}
-    graft.functions.Sketches.register(spark)
     val classes = Seq("head", "middle", "tail")
     // teacher: CCNet terciles over the odd half (LM trained on evens)
     val labeled = TextAnalysis.perplexityBuckets(
@@ -348,7 +346,6 @@ class PipelineSpec extends AnyFunSuite {
     // sf0.1's 1250 train docs it learns: 0.480 vs majority 0.341 at
     // d=1024 (0.488 at 4096). The law lives where it is measurable.
     import graft.pipeline.{Classifier, TextAnalysis}
-    graft.functions.Sketches.register(spark)
     val classes = Seq("head", "middle", "tail")
     val docs01 = Engine.table(spark, "/root/testdata/sf0.1", "documents")
       .select(col("doc_id"), col("text"))
@@ -400,7 +397,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("LSH near-pairs recall vs brute-force (cos >= 0.2 band)") {
-    graft.functions.Sketches.register(spark)
     // ground truth: all pairs among vec_id < 60 with cosine >= 0.2
     val sub = emb.filter(col("vec_id") < 60)
     val a = sub.select(col("vec_id").as("id_a"),
@@ -429,7 +425,6 @@ class PipelineSpec extends AnyFunSuite {
     // hamming scan finds (pigeonhole: hamming <= 3 over 4 chunks leaves
     // one chunk untouched). Verified here with the identical signature
     // recomputed independently and cross-joined.
-    graft.functions.Sketches.register(spark)
     val sigs = docs.select(col("doc_id"),
       array((0 until 2).map { j =>
         graft.functions.Sketches.simhash63(
@@ -455,7 +450,6 @@ class PipelineSpec extends AnyFunSuite {
     // count mh+1 for ANY sigLongs incl. 1, and ONE signature family
     // (xxhash64(t, j)), so raising mh can only add pairs. Completeness
     // vs brute force over the same 63-bit signature, at mh = 3 and 4:
-    graft.functions.Sketches.register(spark)
     val sigs = docs.select(col("doc_id"),
       graft.functions.Sketches.simhash63(
         transform(split(col("text"), " "), t => xxhash64(t, lit(0))))
@@ -484,7 +478,6 @@ class PipelineSpec extends AnyFunSuite {
     // nCells-struct array_sort that dominated the ×50 composed-ANN
     // rehearsal) must rank cells identically to the executable spec:
     // same fold orders (l2sq / CosineSim), same (dist, cell) tie-break
-    graft.functions.Sketches.register(spark)
     val cents = emb.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(16).collect()
       .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
@@ -508,7 +501,6 @@ class PipelineSpec extends AnyFunSuite {
     // that made the two portable dedup queries 74 s + 149 s of the full
     // bench) must be bit-identical to the executable spec over the
     // whole corpus, for both scramble multipliers
-    graft.functions.Sketches.register(spark)
     for (mult <- Seq(2654435761L, 2246822519L)) {
       val mismatch = docs.select(col("doc_id"),
           graft.functions.Sketches.portableSimhash30(col("text"), mult)
@@ -525,7 +517,6 @@ class PipelineSpec extends AnyFunSuite {
   test("DupWindowHashes kernel == HOF slice-fold spec, both families, w 2/15/50") {
     // the O(n) rolling recurrence must be bit-identical to the O(n·w)
     // per-window slice folds the oracle evaluates, corpus-wide
-    graft.functions.Sketches.register(spark)
     for (w <- Seq(2, 15, 50);
          fam <- Seq(Dedup.winFamilyA(w), Dedup.winFamilyB(w))) {
       val mismatch = docs.select(
@@ -793,7 +784,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("PQ codegen kernel == HOF executable spec, code for code") {
-    graft.functions.Sketches.register(spark)
     val cbs = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, k = 16)
     val v = transform(col("embedding"), _.cast("double"))
     val both = emb.select(col("vec_id"),
@@ -1071,7 +1061,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("hashed classifier: kernels == HOF specs, brute-force train/score") {
     import graft.pipeline.{Classifier, TextAnalysis}
-    graft.functions.Sketches.register(spark)
     val d = 256 // small dimension → real bucket collisions exercised
     // HashedBuckets kernel == interpreted HOF spec, bigrams on and off
     for (bi <- Seq(true, false)) {
@@ -1180,7 +1169,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("deterministic logistic refinement == integer-exact brute force") {
     import graft.pipeline.Classifier
-    graft.functions.Sketches.register(spark)
     val P = 1000000007L; val dd = 1024
     def wordHash(s: String): Long = {
       var acc = 0L; var i = 0
@@ -1308,7 +1296,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("kernel param literals are validated at analysis time (driver)") {
-    graft.functions.Sketches.register(spark)
     // d = 1 out of range for HashedBuckets
     val e1 = intercept[org.apache.spark.sql.AnalysisException] {
       docs.select(graft.functions.Sketches.hashedBuckets(
@@ -1333,7 +1320,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("GatherSum raises named errors for null and out-of-range indices") {
-    graft.functions.Sketches.register(spark)
     import spark.implicits._
     val one = Seq(1).toDF("x")
     def run(idx: org.apache.spark.sql.Column): Unit =

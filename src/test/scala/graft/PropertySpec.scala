@@ -192,7 +192,6 @@ class PropertySpec extends AnyFunSuite {
   test("GROUPS frame sum/count/min/max == dense_rank emulation (fuzz)") {
     import spark.implicits._
     import graft.functions.GraftWindowFunctions
-    GraftWindowFunctions.register(spark)
     // random partitions, NULLABLE group keys and values, duplicate keys
     // guaranteed by the small domains; k drawn per sample
     val gen = Gen.zip(
@@ -239,7 +238,6 @@ class PropertySpec extends AnyFunSuite {
   test("GROUPS frame first/last == ROWS frame on unique keys (fuzz)") {
     import spark.implicits._
     import graft.functions.GraftWindowFunctions
-    GraftWindowFunctions.register(spark)
     // with UNIQUE order keys every peer group is one row, so GROUPS k
     // PRECEDING ≡ ROWS k PRECEDING and Spark's own first_value/
     // last_value are the exact oracle (incl. respect-nulls semantics —
@@ -306,6 +304,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("TopKAgg == unfused groupBy+sort+limit on random data w/ nulls+ties") {
     import spark.implicits._
+    import TopKAggSpec.{collectFused, unfused}
     // few distinct groups + a narrow value range → heavy boundary ties;
     // ~1/8 of values null
     val gen: Gen[List[(Long, Option[Double])]] =
@@ -313,25 +312,24 @@ class PropertySpec extends AnyFunSuite {
         Gen.frequency(
           1 -> Gen.const(Option.empty[Double]),
           7 -> Gen.choose(0, 6).map(v => Some(v.toDouble)))))
+    val row = (r: org.apache.spark.sql.Row) => (r.getLong(0),
+      if (r.isNullAt(1)) None else Some(r.getDouble(1)))
     forAllSeeded(Gen.zip(gen, Gen.choose(1, 8)), 8) { case (rows, k) =>
       val df = rows.toDF("g", "v").repartition(7)
-      val got = graft.plans.TopKAgg.topKGroupsByMax(df, Seq("g"), "v", k, "m")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toSeq
-      val exp = df.groupBy(col("g")).agg(max(col("v")).as("m"))
-        .orderBy(col("m").desc_nulls_last, col("g")).limit(k)
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toSeq
-      assert(got == exp, s"k=$k rows=$rows")
-      val gotMin = graft.plans.TopKAgg
-        .topKGroupsByMin(df, Seq("g"), "v", k, "m")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toSeq
-      val expMin = df.groupBy(col("g")).agg(min(col("v")).as("m"))
-        .orderBy(col("m").asc_nulls_last, col("g")).limit(k)
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toSeq
-      assert(gotMin == expMin, s"min k=$k rows=$rows")
+      // the reference is the same plan with the fusion rule excluded
+      for ((api, agg, order) <- Seq(
+          (graft.plans.TopKAgg.topKGroupsByMax _,
+            (c: org.apache.spark.sql.Column) => max(c),
+            col("m").desc_nulls_last),
+          (graft.plans.TopKAgg.topKGroupsByMin _,
+            (c: org.apache.spark.sql.Column) => min(c),
+            col("m").asc_nulls_last))) {
+        val (got, fused) = collectFused(api(df, Seq("g"), "v", k, "m"))(row)
+        val (exp, refFused) = unfused(df.groupBy(col("g"))
+          .agg(agg(col("v")).as("m")).orderBy(order, col("g")).limit(k))(row)
+        assert(fused && !refFused, s"fused=$fused reference fused=$refFused")
+        assert(got == exp, s"$order k=$k rows=$rows")
+      }
     }
   }
 

@@ -12,13 +12,11 @@ class ThetaSpec extends AnyFunSuite {
 
   private def sketchOf(ids: Seq[Long], k: Int, parts: Int = 4): Array[Byte] = {
     import spark.implicits._
-    Theta.register(spark)
     ids.toDF("id").repartition(parts)
       .agg(Theta.sketch(col("id"), k)).head().getAs[Array[Byte]](0)
   }
 
   private def est(sk: Array[Byte]): Long = {
-    Theta.register(spark)
     spark.range(1).select(Theta.estimate(lit(sk))).head().getLong(0)
   }
 
@@ -42,7 +40,6 @@ class ThetaSpec extends AnyFunSuite {
   }
 
   test("union(sketch A, sketch B) == sketch(A ++ B), commutatively") {
-    Theta.register(spark)
     val xs = (1L to 4000L).map(_ * 5)
     val ys = (1L to 4000L).map(_ * 7)
     val sa = sketchOf(xs, k = 256); val sb = sketchOf(ys, k = 256)
@@ -55,7 +52,6 @@ class ThetaSpec extends AnyFunSuite {
   }
 
   test("intersection is exact while both sketches are unsaturated") {
-    Theta.register(spark)
     val xs = (1L to 900L).map(_ * 2)      // evens
     val ys = (1L to 600L).map(_ * 3)      // multiples of 3
     val expected = xs.toSet.intersect(ys.toSet).size.toLong // mult. of 6
@@ -67,7 +63,6 @@ class ThetaSpec extends AnyFunSuite {
   }
 
   test("saturated intersection estimate is within bound") {
-    Theta.register(spark)
     // |A| = |B| = 40000, |A ∩ B| = 20000 (shared block)
     val shared = (1L to 20000L).map(_ * 11 + 1)
     val xs = shared ++ (1L to 20000L).map(_ * 11 + 2)
@@ -83,7 +78,6 @@ class ThetaSpec extends AnyFunSuite {
 
   test("nulls are skipped and k validates at resolution") {
     import spark.implicits._
-    Theta.register(spark)
     val e = Seq[java.lang.Long](1L, null, 2L, null, 1L).toDF("id")
       .agg(Theta.estimate(Theta.sketch(col("id"), 64))).head().getLong(0)
     assert(e === 2L)
