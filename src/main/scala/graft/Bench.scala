@@ -258,13 +258,10 @@ object Bench {
     // flagged `contended` (first pass was the outlier), while a suspect
     // that REPRODUCES keeps its number with the evidence in `retimed`,
     // and anything RECORDED still over the line self-labels via
-    // `hot`/`hot_n`. Knobs: SPARK_GRAFT_RETIME=0 disables;
-    // SPARK_GRAFT_RETIME_PREV points at an alternate previous record
-    // (the firing test — also the only way retiming runs under
-    // SPARK_GRAFT_ONLY). ──────────────────────────────────────────────
+    // `hot`/`hot_n`. SPARK_GRAFT_RETIME=0 disables it; it never runs
+    // under SPARK_GRAFT_ONLY. ──────────────────────────────────────────
     val retimeOn = sys.env.getOrElse("SPARK_GRAFT_RETIME", "1") == "1"
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_RETIME_PREV",
-      "BENCH_FULL.json")
+    val prevPath = "BENCH_FULL.json"
     // the previous committed record is parsed with a REAL JSON parser
     // (Jackson, on Spark's classpath) — r12 ADVICE: the hand-rolled
     // substring parse would silently yield an empty baseline on any
@@ -282,8 +279,7 @@ object Bench {
           // medians from a DIFFERENT scale factor are not a baseline —
           // comparing an sf0.1 run against an sf0.01 record would flag
           // half the corpus and burn minutes re-timing noise (r12
-          // review); a record without an "sf" field (the firing-test
-          // fixture) is accepted as-is
+          // review); a record without an "sf" field is accepted as-is
           val prevSf = Option(root.get("sf")).map(_.asText)
           if (prevSf.exists(_ != sfDir)) {
             System.err.println(s"[bench] retime baseline $prevPath is for " +
@@ -314,9 +310,7 @@ object Bench {
       prevMedians.get(k).exists(p => med > 2.5 * p && med - p > 0.3)
     val firstPassMap = resultsFull0.toMap
     val suspectsAll =
-      if (prevMedians.isEmpty ||
-          (only.isDefined && !sys.env.contains("SPARK_GRAFT_RETIME_PREV")))
-        Seq.empty[String]
+      if (prevMedians.isEmpty || only.isDefined) Seq.empty[String]
       else resultsFull0
         .filter { case (k, (med, _)) => overLine(k, med) }
         .sortBy { case (k, (med, _)) => -(med - prevMedians(k)) }

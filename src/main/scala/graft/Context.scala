@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Name-level parity with the reference's `SessionContext`
   * (datafusion/core/src/execution/context/mod.rs:457,979-1002) and the
@@ -31,17 +30,11 @@ class GraftContext private (val spark: SparkSession) {
   // ── SessionContext::read_* (lazy DataFrame over a path) ─────────────
   def readParquet(path: String): DataFrame = spark.read.parquet(path)
 
-  def readCsv(path: String, header: Boolean = true,
-      delimiter: String = ",", inferSchema: Boolean = true,
-      schema: Option[StructType] = None): DataFrame = {
-    var r = spark.read.option("header", header)
-      .option("delimiter", delimiter)
-    schema match {
-      case Some(s) => r = r.schema(s)
-      case None    => r = r.option("inferSchema", inferSchema)
-    }
-    r.csv(path)
-  }
+  /** Comma-delimited with a header row, schema inferred (the
+    * reference's CsvReadOptions defaults). */
+  def readCsv(path: String): DataFrame =
+    spark.read.option("header", true).option("inferSchema", true)
+      .csv(path)
 
   def readJson(path: String): DataFrame = spark.read.json(path)
 
@@ -58,8 +51,8 @@ class GraftContext private (val spark: SparkSession) {
   def registerParquet(name: String, path: String): Unit =
     readParquet(path).createOrReplaceTempView(name)
 
-  def registerCsv(name: String, path: String, header: Boolean = true): Unit =
-    readCsv(path, header).createOrReplaceTempView(name)
+  def registerCsv(name: String, path: String): Unit =
+    readCsv(path).createOrReplaceTempView(name)
 
   def registerJson(name: String, path: String): Unit =
     readJson(path).createOrReplaceTempView(name)
@@ -103,13 +96,13 @@ class GraftContext private (val spark: SparkSession) {
       .toDF("name", "value", "description")
   }
 
-  /** Register settings() as a queryable view (default name
-    * `graft_settings` — the df_settings role). The view is a SNAPSHOT
-    * of the conf at registration, like a materialized catalog table:
-    * re-register after SET to observe changes (the reference rebuilds
-    * its information_schema tables per scan). */
-  def registerSettingsView(name: String = "graft_settings"): Unit =
-    settings().createOrReplaceTempView(name)
+  /** Register settings() as the queryable view `graft_settings` (the
+    * df_settings role). The view is a SNAPSHOT of the conf at
+    * registration, like a materialized catalog table: re-register after
+    * SET to observe changes (the reference rebuilds its
+    * information_schema tables per scan). */
+  def registerSettingsView(): Unit =
+    settings().createOrReplaceTempView("graft_settings")
 
   // ── CopyTo (COPY (df) TO path ...) ──────────────────────────────────
   /** csv defaults to a header row (the reference's csv writer default,
@@ -144,10 +137,11 @@ object GraftContext {
 }
 
 /** The reference `DataFrame` combinators whose names differ in Spark —
-  * enable with `import graft.DataFrameOps._`. Everything else
+  * enable with `import graft.DataFrameOps._`. A combinator that Dataset
+  * already carries under the reference's name is not wrapped
   * (select/filter/join/sort/limit/union/distinct/intersect/except/
-  * cache/explain/count/collect/show) already carries the same name on
-  * Dataset and needs no wrapper. */
+  * with_column/cache/explain/count/collect/show): users call Spark's
+  * own. */
 object DataFrameOps {
   implicit class RichGraftDataFrame(private val df: DataFrame) extends AnyVal {
     /** df.aggregate(groupExpr, aggrExpr) (dataframe/mod.rs:422). */
@@ -157,10 +151,6 @@ object DataFrameOps {
 
     /** drop_columns (dataframe/mod.rs). */
     def dropColumns(cols: String*): DataFrame = df.drop(cols: _*)
-
-    /** with_column / with_column_renamed. */
-    def withColumnGraft(name: String, c: Column): DataFrame =
-      df.withColumn(name, c)
 
     /** union_distinct (dataframe/mod.rs:1236 union + distinct). */
     def unionDistinct(other: DataFrame): DataFrame =

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One verifiable query: a Spark-side plan builder plus, when the operation
-  * is SQL-expressible, an equivalent DuckDB oracle over the same parquet
-  * tables (the driver's correctness gate — see Verify.scala).
+/** One verifiable query: a Spark-side plan builder plus an equivalent
+  * DuckDB oracle over the same parquet tables (the correctness gate —
+  * see Verify.scala).
   *
   * Conventions that keep the Spark-vs-DuckDB hash compare deterministic:
   *   - every floating-point AGGREGATE is rounded (raw column values pass
@@ -18,15 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class Q(
     build: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    doc: String = "")
+    oracle: Option[String])
 
 object Q {
-  /** Query with a DuckDB oracle. */
+  /** Query with a DuckDB oracle. Every corpus query has one; `oracle`
+    * stays an `Option` for the benchmark harness, which reads it. */
   def apply(oracle: String)(build: (SparkSession, String) => DataFrame): Q =
     Q(build, Some(oracle.stripMargin.trim))
-
-  /** Non-SQL-expressible op — driver records a weaker rows-only check. */
-  def noOracle(build: (SparkSession, String) => DataFrame): Q =
-    Q(build, None)
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * All queries live in `graft.queries.*` grouped by operator family; each
-  * is a `Q` carrying the Spark plan builder and (when SQL-expressible) a
-  * DuckDB oracle for the driver's correctness gate.
+  * is a `Q` carrying the Spark plan builder and a DuckDB oracle for the
+  * driver's correctness gate.
   */
 object SparkEntry {
   /** Every registered query, keyed by name. */
@@ -38,7 +38,7 @@ object SparkEntry {
     all.map { case (k, q) => k -> q.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables (every query has one). */
   def oracleSql: Map[String, String] =
     all.collect { case (k, q) if q.oracle.isDefined => k -> q.oracle.get }
 }

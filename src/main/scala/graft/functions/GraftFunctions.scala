@@ -4,15 +4,19 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Function-surface parity layer: DataFusion scalar functions that Spark
-  * lacks (or names differently), re-expressed as compositions of built-in
-  * `Column` functions so everything stays inside whole-stage codegen — no
-  * Scala UDFs on the hot path.
+  * lacks, re-expressed as compositions of built-in `Column` functions so
+  * everything stays inside whole-stage codegen — no Scala UDFs on the hot
+  * path.
   *
   * Reference inventory: datafusion/functions/src/lib.rs:156 (strings,
   * unicode, regex, math, datetime, crypto/encoding, core) and
   * datafusion/functions-array/src/lib.rs:104-140. Functions that exist 1:1
   * in org.apache.spark.sql.functions (the vast majority — see SURVEY.md
-  * §2.9) are not wrapped: users call Spark's own.
+  * §2.9) are not wrapped, also when Spark names them differently:
+  * users call Spark's own (`timestamp_seconds`/`_millis`/`_micros` for
+  * `to_timestamp_*`, `unix_timestamp` for `to_unixtime`, `typeof` for
+  * `arrow_typeof`, `arrays_overlap` for `array_has_any`, `array_join`
+  * for `array_to_string`, `sequence` for `generate_series`).
   *
   * `registerSql(spark)` additionally exposes the gap functions to SQL via
   * Spark 4 SQL UDFs (CREATE TEMPORARY FUNCTION ... RETURN expr), which the
@@ -50,15 +54,13 @@ object GraftFunctions {
     n.toLong * base
   }
 
-  /** to_timestamp_{seconds,millis,micros,nanos} over numeric input
-    * (functions/src/datetime/to_timestamp.rs). */
-  def to_timestamp_seconds(c: Column): Column = timestamp_seconds(c)
-  def to_timestamp_millis(c: Column): Column  = timestamp_millis(c)
-  def to_timestamp_micros(c: Column): Column  = timestamp_micros(c)
-  def to_timestamp_nanos(c: Column): Column   = timestamp_micros((c / 1000).cast("long"))
-
-  /** to_unixtime (functions/src/datetime/to_unixtime.rs) — epoch seconds. */
-  def to_unixtime(c: Column): Column = unix_timestamp(c)
+  /** to_timestamp_nanos over numeric input
+    * (functions/src/datetime/to_timestamp.rs): Spark timestamps hold
+    * microseconds, so the nanoseconds are truncated toward zero. The
+    * division is integral: a double quotient loses the microsecond digit
+    * of present-day nanosecond epochs (~1.7e18 > 2^53). */
+  def to_timestamp_nanos(c: Column): Column =
+    timestamp_micros(call_function("div", c.cast("long"), lit(1000L)))
 
   // ── core / conditional ────────────────────────────────────────────────
   /** nvl2(test, ifNotNull, ifNull) (functions/src/core/nvl2.rs). */
@@ -85,10 +87,6 @@ object GraftFunctions {
       case "sha512" => sha2(c, 512)
       case a => throw new IllegalArgumentException(s"bad algorithm: $a")
     }
-
-  /** arrow_typeof (functions/src/core/arrow_typeof.rs) — the engine's
-    * type-introspection function, mapped to Spark's `typeof`. */
-  def arrow_typeof(c: Column): Column = call_function("typeof", c)
 
   /** arrow_cast(value, 'ArrowType') (functions/src/core/arrow_cast.rs):
     * cast by Arrow type NAME, translated per the SURVEY §1 mapping
@@ -154,23 +152,14 @@ object GraftFunctions {
   def array_replace_all(a: Column, from: Column, to: Column): Column =
     transform(a, x => when(x === from, to).otherwise(x))
 
-  /** array_has_all / array_has_any (functions-array/src/array_has.rs). */
+  /** array_has_all (functions-array/src/array_has.rs). */
   def array_has_all(a: Column, b: Column): Column = size(array_except(b, a)) === 0
-  def array_has_any(a: Column, b: Column): Column = arrays_overlap(a, b)
 
   /** array_empty / cardinality-style helpers. */
   def array_empty(a: Column): Column = size(a) === 0
 
   /** array_dims (functions-array/src/dims kernel) for a 1-D array. */
   def array_dims(a: Column): Column = array(size(a))
-
-  /** string_to_array / array_to_string (DataFusion names). */
-  def string_to_array(c: Column, delim: String): Column = split(c, delim)
-  def array_to_string(a: Column, delim: String): Column = array_join(a, delim)
-
-  /** generate_series(start, stop, step) → Spark sequence. */
-  def generate_series(start: Column, stop: Column, step: Column): Column =
-    sequence(start, stop, step)
 
   // ── SQL registration (Spark 4 SQL UDFs, planner-inlined) ──────────────
   def registerSql(spark: SparkSession): Unit = Seq(

@@ -46,7 +46,6 @@ class ElementwiseMin(k: Int)
 object GroupMinHash {
   /** Column API: group-level MinHash from per-row signature arrays. */
   def groupSignature(sig: Column, k: Int): Column = {
-    implicit val inEnc: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
     udaf(new ElementwiseMin(k)).apply(sig)
   }
 }

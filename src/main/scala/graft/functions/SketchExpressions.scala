@@ -78,7 +78,7 @@ case class SimHash63(child: Expression) extends UnaryExpression {
   * with a caller-chosen scramble multiplier (foldable) — the codegen
   * kernel for the oracle-replayable signature behind pipe_dedup_simhash
   * and pipe_dedup_simhash_wide. Bit-identical to the HOF spec
-  * (Dedup.simhash30FromHashes ∘ tokenHashesPortableScrambled, asserted
+  * (KernelSpecs.simhash30FromHashes ∘ tokenHashesPortableScrambled, asserted
   * in PipelineSpec): tokens are the non-empty \s+ splits, each token's
   * hash is the codepoint polynomial acc·131+cp mod 1e9+7 scrambled by
   * `mult` mod 1073741789 (< 2^30, all values non-negative so pmod ≡ %),
@@ -297,7 +297,7 @@ case class MinHash64(child: Expression, kExpr: Expression)
   *
   * `right` is the foldable params literal
   * [k, shingleN, cpBase, prime, multPrime, multBase]; the HOF spec
-  * (Dedup.portableMinhashHof) is equivalence-asserted in PipelineSpec.
+  * (KernelSpecs.portableMinhashHof, src/test) is equivalence-asserted in PipelineSpec.
   * Reference frame: datafusion has no MinHash surface — this extends
   * the minhashPairs family (Broder 1997 resemblance sketches). */
 case class PortableMinHash(left: Expression, right: Expression)
@@ -631,7 +631,7 @@ case class RollingFpPortable(child: Expression) extends UnaryExpression {
   * subspace, the codeword with the smallest squared-L2 distance to the
   * vector's slice, FIRST index on ties (strict <), with the distance
   * accumulated in ascending dimension order so results are bit-identical
-  * to the HOF spec (Similarity.pqCodesHof) and the DuckDB oracle's
+  * to the HOF spec (KernelSpecs.pqCodesHof, src/test) and the DuckDB oracle's
   * list_reduce fold. The interpreted HOF form costs m·k nested lambda
   * folds per row (~1 ms at m=16, k=64 — it dominated the PipeScale PQ
   * stage); this kernel is the same math as a tight JVM loop. */
@@ -730,7 +730,7 @@ case class PqCodes(left: Expression, right: Expression)
   * cosine with CosineSim's fold. Ranking is (distance asc via
   * java.lang.Double.compare — Spark's double ordering — then cell
   * asc), exactly the HOF spec's array_sort on (dist, cell) structs
-  * (Similarity.nearestCellsHof/nearestCellsL2Hof, equivalence
+  * (KernelSpecs.nearestCellsHof/nearestCellsL2Hof, equivalence
   * corpus-asserted in PipelineSpec). The interpreted HOF allocates and
   * sorts an nCells-struct array per row through generic expression
   * trees — at 512 cells × 100k rows × several training passes it
@@ -885,7 +885,7 @@ case class CosineSim(left: Expression, right: Expression)
   * hash family:
   *
   *   wordHash(t) = (fold_cp (acc·cpBase + cp) mod prime) · mult
-  *                 mod multPrime          (the tokenHashesPortable shape)
+  *                 mod multPrime  (the PortableSimhash30 token-hash shape)
   *   winHash(i)  = fold_{j=i..i+w-1} (acc·winBase + wordHash_j) mod prime
   *
   * Returns array<bigint> of length max(0, nWords − w + 1) — tokens are
@@ -894,7 +894,7 @@ case class CosineSim(left: Expression, right: Expression)
   * with the O(n) rolling recurrence
   *   h' = ((h − wh_i · winBase^{w−1}) · winBase + wh_{i+w}) mod prime
   * which is algebraically identical to the per-window slice fold the
-  * HOF spec (Dedup.dupWindowHashesHof) and the DuckDB oracle evaluate —
+  * HOF spec (KernelSpecs.dupWindowHashesHof) and the DuckDB oracle evaluate —
   * equivalence corpus-asserted in PipelineSpec for both families. All
   * intermediates fit signed 64-bit (bounds enforced on the literal):
   * acc < prime ≤ 1e9+7 < 2^30 so acc·mult < 2^62; wordHash < multPrime
@@ -1012,7 +1012,7 @@ case class DupWindowHashes(left: Expression, right: Expression)
   * FOLDABLE array<long> literal [d, bi, cpBase, prime, biBase],
   * validated once at analysis time. Output order is unigrams in token
   * order then bigrams in pair order — the contract the HOF spec
-  * (Classifier.bucketsHof) and the DuckDB oracle both reproduce.
+  * (KernelSpecs.bucketsHof) and the DuckDB oracle both reproduce.
   * The interpreted HOF form runs one lambda per CHARACTER (the
   * RollingFpPortable lesson — a 224× map-side tax at corpus scale). */
 case class HashedBuckets(left: Expression, right: Expression)
@@ -1105,7 +1105,7 @@ case class HashedBuckets(left: Expression, right: Expression)
   * array<double> literal — the map-side linear-model dot product (the
   * weight vector ships as a literal, exactly the bytes the driver
   * trained; no join, no shuffle). Accumulates left-to-right in index
-  * order, matching the HOF spec (Classifier.gatherSumHof). An index
+  * order, matching the HOF spec (KernelSpecs.gatherSumHof). An index
   * outside [0, |vals|) raises a named error (buckets from
   * HashedBuckets are always in range when d = |vals|). */
 case class GatherSum(left: Expression, right: Expression)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{
-  Add, AggregateWindowFunction, And, ArrayMax, ArrayMin, AttributeReference,
+  Add, AggregateWindowFunction, ArrayMax, ArrayMin, AttributeReference,
   Cast, Concat, CreateArray, CurrentRow, ElementAt, EqualNullSafe, EqualTo,
   Expression, Greatest, GreaterThan, If, IsNull, Least, Literal, Multiply,
   Not, Or, RangeFrame, Size, Slice, SpecifiedWindowFrame, Subtract,

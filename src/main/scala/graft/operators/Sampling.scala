@@ -118,7 +118,7 @@ object Sampling {
   }
 
   /** Deterministic train/val/test assignment by content hash: adds
-    * `splitCol` mapping each row to the first split whose cumulative
+    * a `split` column mapping each row to the first split whose cumulative
     * fraction covers its md5 bucket.
     *
     * The bucket is the first 4 hex chars of md5(id) compared as a
@@ -134,8 +134,7 @@ object Sampling {
     * (a new drop of documents can't move an old row into train).
     */
   def hashSplit(df: DataFrame, idCol: String,
-      splits: Seq[(String, Double)],
-      splitCol: String = "split"): DataFrame = {
+      splits: Seq[(String, Double)]): DataFrame = {
     require(splits.size >= 2, "need at least two splits")
     require(splits.forall(_._2 > 0), "split fractions must be positive")
     require(math.abs(splits.map(_._2).sum - 1.0) < 1e-9,
@@ -155,6 +154,6 @@ object Sampling {
     val chained = splits.tail.init.zip(thresholds.tail).foldLeft(head) {
       case (acc, ((name, _), th)) => acc.when(bucket < lit(th), lit(name))
     }
-    df.withColumn(splitCol, chained.otherwise(lit(splits.last._1)))
+    df.withColumn("split", chained.otherwise(lit(splits.last._1)))
   }
 }

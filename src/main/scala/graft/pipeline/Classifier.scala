@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * perplexity score with a trained linear classifier; reference frame:
   * fastText's hashed n-gram bag + linear layer, Joulin et al. 2016).
   *
-  * Features are hashed word unigrams (+ optional bigrams) bucketed into
-  * a fixed dimension `d` with the engine-portable codepoint-polynomial
+  * Features are hashed word unigrams and bigrams (only [[buckets]] can
+  * leave the bigrams out) bucketed into a fixed dimension `d` with the
+  * engine-portable codepoint-polynomial
   * hash (family A of fingerprintPortable / the window-hash kernels), so
   * an external oracle recomputes every bucket — and therefore every
   * score — bit-for-bit. Training is closed-form logistic-on-counts
@@ -41,35 +42,10 @@ object Classifier {
 
   /** Feature buckets of a text column: unigram buckets in token order,
     * then bigram buckets in pair order (empty tokens dropped). Codegen'd
-    * kernel; the HOF spec below is equivalence-asserted in PipelineSpec. */
+    * kernel; its HOF spec (KernelSpecs.bucketsHof, src/test) is
+    * equivalence-asserted in PipelineSpec. */
   def buckets(text: Column, d: Int, includeBigrams: Boolean = true): Column =
     graft.functions.Sketches.hashedBuckets(text, famParams(d, includeBigrams))
-
-  /** HOF spec for [[buckets]]: per-word codepoint folds (one interpreted
-    * lambda per CHARACTER — spec only; the kernel is the hot path). The
-    * word-hash array is LET-BOUND via transform(array(e), ws -> …) (the
-    * SCALE.md idiom) so it isn't recomputed per position. */
-  private[graft] def bucketsHof(
-      text: Column, d: Int, includeBigrams: Boolean = true): Column = {
-    val whs0 = transform(filter(split(text, "\\s+"), t => t =!= ""), t =>
-      aggregate(TextAnalysis.codepoints(t), lit(0L),
-        (acc, cp) => pmod(acc * 131L + cp, lit(P))))
-    element_at(transform(array(whs0), whs => {
-      val uni = transform(whs, h => pmod(h, lit(d.toLong)).cast("int"))
-      val bi =
-        when(size(whs) < 2, array().cast("array<int>"))
-          .otherwise(transform(sequence(lit(1), size(whs) - 1), i =>
-            pmod(pmod(element_at(whs, i) * 131L + element_at(whs, i + 1),
-              lit(P)), lit(d.toLong)).cast("int")))
-      if (includeBigrams) concat(uni, bi) else uni
-    }), 1)
-  }
-
-  /** HOF spec for the GatherSum kernel: left-to-right fold of
-    * weights[idx] in index order. */
-  private[graft] def gatherSumHof(idx: Column, weights: Seq[Double]): Column =
-    aggregate(idx, lit(0.0),
-      (acc, b) => acc + element_at(typedlit(weights), b + 1))
 
   /** Closed-form training: per-bucket class counts → naive-Bayes
     * log-odds weights + a smoothed prior bias. Driver work is exactly
@@ -78,20 +54,19 @@ object Classifier {
     * broadcasts. Labels must be 0/1 (castable to int). */
   def trainLogOdds(
       train: DataFrame, textCol: String, labelCol: String, d: Int,
-      alpha: Double = 1.0, includeBigrams: Boolean = true)
-      : (Array[Double], Double) =
+      alpha: Double = 1.0): (Array[Double], Double) =
     trainLogOddsFeats(
-      featurizeBinary(train, textCol, labelCol, d, includeBigrams),
+      featurizeBinary(train, textCol, labelCol, d),
       d, alpha)
 
   /** Binary twin of [[featurizeMulti]]: one (y, fb) pass shared by the
     * NB-init and the GD refinement (r15 — the sgd chain featurized the
     * train half twice). */
   def featurizeBinary(
-      train: DataFrame, textCol: String, labelCol: String, d: Int,
-      includeBigrams: Boolean = true): DataFrame = {
+      train: DataFrame, textCol: String, labelCol: String, d: Int)
+      : DataFrame = {
     train.select(col(labelCol).cast("int").as("y"),
-      buckets(coalesce(col(textCol), lit("")), d, includeBigrams).as("fb"))
+      buckets(coalesce(col(textCol), lit("")), d).as("fb"))
   }
 
   /** [[trainLogOdds]] over a pre-featurized (y, fb) frame. */
@@ -147,11 +122,10 @@ object Classifier {
     * tie-break order downstream. */
   def trainLogOddsMulti(
       train: DataFrame, textCol: String, labelCol: String,
-      classes: Seq[String], d: Int, alpha: Double = 1.0,
-      includeBigrams: Boolean = true)
+      classes: Seq[String], d: Int, alpha: Double = 1.0)
       : (Map[String, Array[Double]], Map[String, Double]) =
     trainLogOddsMultiFeats(
-      featurizeMulti(train, textCol, labelCol, d, includeBigrams),
+      featurizeMulti(train, textCol, labelCol, d),
       classes, d, alpha)
 
   /** One (y, fb) featurization pass shared by the NB-init and the GD
@@ -162,10 +136,10 @@ object Classifier {
     * (Materialize.checkpoint) and pass it to the *Feats variants;
     * values are identical by construction (same kernel, same casts). */
   def featurizeMulti(
-      train: DataFrame, textCol: String, labelCol: String, d: Int,
-      includeBigrams: Boolean = true): DataFrame = {
+      train: DataFrame, textCol: String, labelCol: String, d: Int)
+      : DataFrame = {
     train.select(col(labelCol).cast("string").as("y"),
-      buckets(coalesce(col(textCol), lit("")), d, includeBigrams).as("fb"))
+      buckets(coalesce(col(textCol), lit("")), d).as("fb"))
   }
 
   /** [[trainLogOddsMulti]] over a pre-featurized (y, fb) frame. */
@@ -218,8 +192,8 @@ object Classifier {
   def scoreMulti(
       df: DataFrame, idCol: String, textCol: String,
       classes: Seq[String],
-      weights: Map[String, Array[Double]], priors: Map[String, Double],
-      includeBigrams: Boolean = true): DataFrame = {
+      weights: Map[String, Array[Double]], priors: Map[String, Double])
+      : DataFrame = {
     require(classes.nonEmpty && weights.keySet == classes.toSet &&
       priors.keySet == classes.toSet,
       "weights/priors must cover exactly the declared classes")
@@ -232,7 +206,7 @@ object Classifier {
         classes.map(c => s"$c=${weights(c).length}").mkString(", "))
     val base = df
       .select(col(idCol), coalesce(col(textCol), lit("")).as("__t"))
-      .withColumn("__fb", buckets(col("__t"), d, includeBigrams))
+      .withColumn("__fb", buckets(col("__t"), d))
     val scored = classes.foldLeft(base) { (acc, c) =>
       acc.withColumn(s"s_$c",
         round(graft.functions.Sketches.gatherSum(col("__fb"),
@@ -328,10 +302,9 @@ object Classifier {
   def trainLogisticFixed(
       train: DataFrame, textCol: String, labelCol: String,
       initWq: Array[Long], initBq: Long,
-      iters: Int, lr: Double,
-      includeBigrams: Boolean = true): (Array[Long], Long) = {
-    val feats = featurizeBinary(train, textCol, labelCol, initWq.length,
-      includeBigrams).persist()
+      iters: Int, lr: Double): (Array[Long], Long) = {
+    val feats = featurizeBinary(train, textCol, labelCol, initWq.length)
+      .persist()
     // the Feats variant's n-count materializes the cache before the loop
     try trainLogisticFixedFeats(feats, initWq, initBq, iters, lr)
     finally feats.unpersist()
@@ -476,8 +449,7 @@ object Classifier {
   def scoreMultiFixed(
       df: DataFrame, idCol: String, textCol: String,
       classes: Seq[String],
-      wq: Map[String, Array[Long]], bq: Map[String, Long],
-      includeBigrams: Boolean = true): DataFrame = {
+      wq: Map[String, Array[Long]], bq: Map[String, Long]): DataFrame = {
     require(classes.nonEmpty && wq.keySet == classes.toSet &&
       bq.keySet == classes.toSet,
       "wq/bq must cover exactly the declared classes")
@@ -486,7 +458,7 @@ object Classifier {
       s"all per-class weight arrays must share length $d")
     val base = df
       .select(col(idCol), coalesce(col(textCol), lit("")).as("__t"))
-      .withColumn("__fb", buckets(col("__t"), d, includeBigrams))
+      .withColumn("__fb", buckets(col("__t"), d))
     val scoredDf = classes.foldLeft(base) { (acc, c) =>
       acc.withColumn(s"s_$c",
         round((lit(bq(c).toDouble) +
@@ -514,11 +486,10 @@ object Classifier {
     * away from zero, which Spark (BigDecimal HALF_UP) and DuckDB do. */
   def scoreFixed(
       df: DataFrame, idCol: String, textCol: String,
-      wq: Seq[Long], bq: Long,
-      includeBigrams: Boolean = true): DataFrame = {
+      wq: Seq[Long], bq: Long): DataFrame = {
     val d = wq.length
     df.select(col(idCol), coalesce(col(textCol), lit("")).as("__t"))
-      .withColumn("__fb", buckets(col("__t"), d, includeBigrams))
+      .withColumn("__fb", buckets(col("__t"), d))
       .select(col(idCol),
         size(col("__fb")).cast("long").as("n_feats"),
         round((lit(bq.toDouble) +
@@ -535,11 +506,10 @@ object Classifier {
     * between Spark and an oracle. One scan, zero shuffles. */
   def score(
       df: DataFrame, idCol: String, textCol: String,
-      weights: Seq[Double], bias: Double,
-      includeBigrams: Boolean = true): DataFrame = {
+      weights: Seq[Double], bias: Double): DataFrame = {
     val d = weights.length
     df.select(col(idCol), coalesce(col(textCol), lit("")).as("__t"))
-      .withColumn("__fb", buckets(col("__t"), d, includeBigrams))
+      .withColumn("__fb", buckets(col("__t"), d))
       .select(col(idCol),
         size(col("__fb")).cast("long").as("n_feats"),
         round(graft.functions.Sketches.gatherSum(col("__fb"), weights)

@@ -229,11 +229,11 @@ object Clustering {
 
   /** Cluster-and-keep: drop every row whose id sits in a pair cluster
     * but is not its representative (the min id). Rows never paired
-    * survive untouched — dedup semantics over any candidate generator. */
+    * survive untouched — dedup semantics over any candidate generator.
+    * `pairs` carries the pair ids as `id_a`, `id_b`. */
   def dedupByPairs(
-      df: DataFrame, idCol: String, pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    val drop = connectedComponents(pairs, aCol, bCol)
+      df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val drop = connectedComponents(pairs, "id_a", "id_b")
       .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
     df.join(drop, Seq(idCol), "left_anti")

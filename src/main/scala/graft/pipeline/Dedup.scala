@@ -18,43 +18,18 @@ object Dedup {
 
   /** Distinct word n-gram shingles of a text column — the codegen'd
     * Shingles expression (functions/SketchExpressions.scala): one pass,
-    * no per-position array allocation. Requires Sketches.register on
-    * the session (all Dedup entry points register). */
+    * no per-position array allocation (HOF spec:
+    * KernelSpecs.shinglesHof, src/test). */
   def shingles(text: Column, n: Int): Column =
     graft.functions.Sketches.shingles(text, n)
-
-  /** The higher-order-function formulation, kept as the executable spec
-    * for the Shingles expression (equivalence asserted in OperatorSpec).
-    * The word array is LET-BOUND via a 1-element wrapper transform —
-    * a lambda body that referenced `split(text)` directly would
-    * re-evaluate the split once per shingle position (HOF lambdas aren't
-    * CSE'd): measured 8× slowdown at sf0.1. */
-  private[graft] def shinglesHof(text: Column, n: Int): Column = {
-    val ws = split(text, " ")
-    array_distinct(element_at(
-      transform(array(ws), w =>
-        transform(sequence(lit(1), greatest(size(w) - (n - 1), lit(1))),
-          i => array_join(slice(w, i, lit(n)), " "))),
-      1))
-  }
 
   /** k-wide MinHash signature over a shingle array, as the codegen'd
     * MinHash64 expression (functions/SketchExpressions.scala): one tight
     * shingles×k loop per row, bit-identical to the HOF fold it replaced
-    * (equivalence asserted in OperatorSpec). No explode, no shuffle.
-    * Requires Sketches.register on the session (call sites do). */
+    * (KernelSpecs.minhashSignatureHof; equivalence asserted in
+    * OperatorSpec). No explode, no shuffle. */
   def minhashSignature(sh: Column, k: Int): Column =
     graft.functions.Sketches.minhash64(sh, k)
-
-  /** The original higher-order-function formulation, kept as the
-    * executable spec for the MinHash64 expression: each shingle hashed
-    * once, a single fold updates all k family minima per element. */
-  private[graft] def minhashSignatureHof(sh: Column, k: Int): Column =
-    aggregate(
-      transform(sh, s => xxhash64(s)),
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(k - 1)),
-        (m, i) => least(m, xxhash64(i, h))))
 
   /** Estimated Jaccard from two MinHash signatures: fraction of agreeing
     * positions. */
@@ -72,7 +47,7 @@ object Dedup {
     * long taking the remaining bits. */
   private def chunks(sigs: Seq[Column], perSig: Int, width: Int,
       sigBits: Int): Column =
-    array((for ((s, j) <- sigs.zipWithIndex; c <- 0 until perSig) yield {
+    array((for (s <- sigs; c <- 0 until perSig) yield {
       val w = if (c == perSig - 1) sigBits - c * width else width
       shiftright(s, c * width).bitwiseAND(lit((1L << w) - 1))
     }): _*)
@@ -119,9 +94,9 @@ object Dedup {
     * PRECONDITION (r14 ADVICE): `hs` must contain no NULL elements. The
     * arithmetic majority vote nullifies a bit-sum on a null hash (the
     * old ±1 fold counted it as a −1 vote), so a nullable caller would
-    * silently get all-zero simhashes. Unreachable via [[tokenHashes]] /
-    * [[tokenHashesPortable]] (hashes of split() tokens are never null);
-    * a future caller with nullable hashes must filter first. */
+    * silently get all-zero simhashes. Unreachable via [[tokenHashes]]
+    * (hashes of split() tokens are never null); a future caller with
+    * nullable hashes must filter first. */
   def simhashFromHashes(hs: Column): Column =
     aggregate(
       transform(sequence(lit(0), lit(62)), i =>
@@ -136,44 +111,6 @@ object Dedup {
           .otherwise(0L)),
       lit(0L), (acc, b) => acc * 2 + b)
 
-  /** Engine-portable per-token hash: codepoint polynomial mod 1e9+7 (the
-    * same word hash as TextAnalysis.fingerprintPortable) — ~30 useful
-    * bits, reproducible in any engine with string/codepoint functions
-    * (the DuckDB oracle replays it with list_reduce + unicode()). */
-  def tokenHashesPortable(text: Column): Column =
-    tokenHashesPortableScrambled(text, 2654435761L)
-
-  /** [[tokenHashesPortable]] with a caller-chosen scramble multiplier —
-    * distinct odd multipliers yield independent portable hash families
-    * (the wide-signature variant needs two). */
-  private[graft] def tokenHashesPortableScrambled(
-      text: Column, mult: Long): Column =
-    transform(filter(split(text, "\\s+"), w => w =!= ""), w =>
-      // final Knuth-multiply scramble spreads short words (single chars
-      // hash < 128 under the bare polynomial) across all 30 bits;
-      // codepoint iteration (not UTF-16 units) matches the DuckDB
-      // oracle's unicode() on astral chars too — see
-      // TextAnalysis.codepoints
-      pmod(aggregate(TextAnalysis.codepoints(w),
-        lit(0L), (acc, cp) => pmod(acc * 131 + cp, lit(1000000007L)))
-        * mult, lit(1073741789L)))
-
-  /** 30-bit SimHash over portable token hashes, bit i at position i —
-    * the fully-oracle-replayable variant behind pipe_dedup_simhash
-    * (r6 verdict #2: no emitted column may be engine-private). The
-    * production 63-bit xxhash64 kernel (simhash63 codegen expression)
-    * stays the scale path; its equivalence to the HOF spec is asserted
-    * in OperatorSpec and re-asserted per-run by pipe_text_rolling_fp. */
-  private[graft] def simhash30FromHashes(hs: Column): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(29)), i =>
-        when(aggregate(hs, lit(0L), (acc, h) =>
-          acc + when(call_function("shiftright", h, i.cast("int"))
-            .bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)) > 0,
-          call_function("shiftleft", lit(1L), i.cast("int")))
-          .otherwise(lit(0L))),
-      lit(0L), (acc, b) => acc + b)
-
   /** SimHash near-dup pairs over the portable 30-bit signature
     * (oracle-replayable), blocked on 4×8-bit pigeonhole chunks —
     * complete for `maxHamming` ≤ 3. Returns (id_a, id_b, hamming). */
@@ -183,10 +120,6 @@ object Dedup {
     BandJoin.pairs(portableSigs(df, col(idCol), textCol, "sig"),
       chunks(Seq(col("sig")), 4, 8, 30),
       Seq(hamming("sig").as("hamming")), col("hamming") <= maxHamming)
-
-  /** 63-bit SimHash of a space-tokenized text column. */
-  def simhash(textColName: String): Column =
-    simhashFromHashes(tokenHashes(col(textColName)))
 
   /** SimHash signature-width sizing rule — the sigLongs analogue of the
     * LSH band rule and ivfParams/pqParams (r10 verdict #8): pigeonhole
@@ -211,17 +144,15 @@ object Dedup {
     }.getOrElse(8)
   }
 
-  /** SimHash near-duplicate pairs over `sigLongs` 63-bit xxhash64
-    * SimHashes: [[simhashPairsWide]] with `sigLongs` from
-    * [[simhashSigLongs]] when 0 (the default). `n` is the caller-known
-    * corpus size for that rule; the default −1 spends a `df.count()`
-    * job. Both are ignored when `sigLongs` is pinned. */
+  /** SimHash near-duplicate pairs over 63-bit xxhash64 SimHashes:
+    * [[simhashPairsWide]] with the signature width from
+    * [[simhashSigLongs]]. `n` is the caller-known corpus size for that
+    * rule; the default −1 spends a `df.count()` job. */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, sigLongs: Int = 0, n: Long = -1L): DataFrame =
+      maxHamming: Int = 3, n: Long = -1L): DataFrame =
     simhashPairsWide(df, idCol, textCol, maxHamming,
-      if (sigLongs > 0) sigLongs
-      else simhashSigLongs(if (n >= 0) n else df.count(), maxHamming))
+      simhashSigLongs(if (n >= 0) n else df.count(), maxHamming))
 
   /** Oracle-replayable twin of [[simhashPairsWide]]: a 60-bit signature
     * from two independent portable 30-bit SimHashes, blocked on 4×15-bit
@@ -348,34 +279,13 @@ object Dedup {
     * groupBy (~60 combined bits; false-pair odds for a differing window
     * ~1e-18 — birthday-safe to ~1e9 windows, and DupWindowHashes is
     * parametric so a third family can join the key at true 100 TB
-    * corpus sizes). Family A is exactly the tokenHashesPortable /
+    * corpus sizes). Family A is exactly the PortableSimhash30 token-hash /
     * fingerprintPortable hash family; family B differs in every
     * constant (all six primes). */
   private[graft] def winFamilyA(w: Int): Seq[Long] =
     Seq(w, 131L, 1000000007L, 2654435761L, 1073741789L, 31L)
   private[graft] def winFamilyB(w: Int): Seq[Long] =
     Seq(w, 137L, 998244353L, 2246822519L, 1073741783L, 37L)
-
-  /** HOF spec for the DupWindowHashes kernel: per-window slice folds —
-    * O(n·w) interpreted lambdas, vs the kernel's O(n) rolling pass
-    * (identical algebra; corpus equivalence asserted in PipelineSpec).
-    * The word-hash array is LET-BOUND via transform(array(e), ws -> …)
-    * (the SCALE.md idiom) — a captured `whs` would re-tokenize the doc
-    * at every window position, making the spec O(n·len) per doc. */
-  private[graft] def dupWindowHashesHof(
-      text: Column, fam: Seq[Long]): Column = {
-    val Seq(w, cpBase, prime, mult, multPrime, winBase) = fam
-    val whs0 = transform(filter(split(text, "\\s+"), t => t =!= ""), t =>
-      pmod(aggregate(TextAnalysis.codepoints(t), lit(0L),
-        (acc, cp) => pmod(acc * cpBase + cp, lit(prime))) * mult,
-        lit(multPrime)))
-    element_at(transform(array(whs0), whs =>
-      when(size(whs) < w.toInt,
-        array().cast("array<bigint>"))
-        .otherwise(transform(sequence(lit(0), size(whs) - w.toInt), i =>
-          aggregate(slice(whs, i + 1, lit(w.toInt)), lit(0L),
-            (acc, h) => pmod(acc * winBase + h, lit(prime)))))), 1)
-  }
 
   /** Non-keeper occurrences of duplicated W-token windows:
     * (doc_id, pos) where the window starting at token `pos` appears at
@@ -478,7 +388,7 @@ object Dedup {
       .withColumn("spans", coalesce(col("spans"),
         array().cast("array<struct<s:bigint,e:bigint>>")))
       .withColumn("ws", filter(split(col("text"), "\\s+"), t => t =!= ""))
-      .withColumn("kept", filter(col("ws"), (t, i) =>
+      .withColumn("kept", filter(col("ws"), (_, i) =>
         !exists(col("spans"), sp =>
           i.cast("long") >= sp.getField("s") &&
             i.cast("long") < sp.getField("e"))))
@@ -541,21 +451,20 @@ object Dedup {
     * is a duplicate iff some store signature or some smaller-id batch
     * signature lies within `maxHamming` (0..3) of its portable 30-bit
     * SimHash, blocked on the 4×8-bit chunks of [[simhashPairsPortable]].
-    * `useBloom` prefilters the store scan (exactness-neutral);
-    * `persistSigs` checkpoints the batch signatures. Returns (doc_id,
-    * sig, is_dup, dup_src), dup_src = smallest matching id, null for
-    * keepers; append `.select(col("doc_id").as("id"), col("sig"))` to
-    * the store for the next snapshot. */
+    * `useBloom` prefilters the store scan (exactness-neutral); the
+    * batch signatures are checkpointed. Returns (doc_id, sig, is_dup,
+    * dup_src), dup_src = smallest matching id, null for keepers; append
+    * `.select(col("doc_id").as("id"), col("sig"))` to the store for the
+    * next snapshot. */
   def incrementalDedupSimhash(
       storeSigs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
-      maxHamming: Int = 1, useBloom: Boolean = true,
-      persistSigs: Boolean = true): DataFrame = {
+      maxHamming: Int = 1, useBloom: Boolean = true): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"portable pigeonhole blocking covers maxHamming 0..3, got $maxHamming")
     BandJoin.store(storeSigs, simhashStorePortable(batch, idCol, textCol),
       chunks(Seq(col("sig")), 4, 8, 30), hamming("sig") <= maxHamming,
-      useBloom, persistSigs)
+      useBloom, persistSigs = true)
   }
 
   // ── incremental dedup against a persisted MinHash-LSH store (r14) ───
@@ -563,15 +472,15 @@ object Dedup {
   // pipelines (the DCLM/FineWeb/Dolma lineage) predominantly dedup on
   // MinHash-LSH banding, so the store operator needs a MinHash variant
   // alongside SimHash. The signature is ENGINE-PORTABLE (codepoint-
-  // polynomial shingle hashes × k odd-multiplier families — the
+  // polynomial shingle hashes × 16 odd-multiplier families — the
   // PortableMinHash kernel) so an external oracle recomputes every
   // signature, band key, and agreement count bit-for-bit: unlike the
   // xxhash64 minhashPairs (whose output is oracle-checked against the
   // EXACT jaccard pair set), the incremental decision itself is
   // value-replayable. The dup rule is symmetric — pair (x, y) is a
   // match iff some band's signature slice is identical AND at least
-  // `minAgree` of the k positions agree (est-Jaccard ≥ minAgree/k as
-  // an integer test, no fp) — so the store-OR-earlier greedy rule
+  // 8 of the 16 positions agree (est-Jaccard ≥ 1/2 as an integer
+  // test, no fp) — so the store-OR-earlier greedy rule
   // equals the global smaller-id rule whenever store ids precede batch
   // ids, exactly the SimHash store's law (PipelineSpec asserts it).
 
@@ -582,66 +491,31 @@ object Dedup {
   private[graft] def portableMinhashParams(k: Int, n: Int): Seq[Long] =
     Seq(k.toLong, n.toLong, 131L, 1000000007L, 1073741789L, 2654435761L)
 
-  /** HOF spec for the PortableMinHash kernel: shingle strings via the
-    * per-position slice/join formulation, each hashed by the codepoint
-    * polynomial of the JOINED string, position q = min of the
-    * (multBase + 2q)-scrambled hashes. Both the shingle list and the
-    * hash list are LET-BOUND via the 1-element-wrapper transform (the
-    * SCALE.md idiom) — a lambda referencing them directly would
-    * recompute per position/per q. Equivalence to the kernel is
-    * corpus-asserted in PipelineSpec; spec only, not the hot path. */
-  private[graft] def portableMinhashHof(
-      text: Column, k: Int, n: Int): Column = {
-    val ws = split(text, " ")
-    val sh = element_at(
-      transform(array(ws), w =>
-        transform(sequence(lit(1), greatest(size(w) - (n - 1), lit(1))),
-          i => array_join(slice(w, i, lit(n)), " "))), 1)
-    val hs = element_at(
-      transform(array(sh), shl =>
-        transform(shl, s =>
-          aggregate(TextAnalysis.codepoints(s), lit(0L),
-            (acc, cp) => pmod(acc * 131 + cp, lit(1000000007L))))), 1)
-    element_at(
-      transform(array(hs), hl =>
-        transform(sequence(lit(0), lit(k - 1)), q =>
-          array_min(transform(hl, h =>
-            pmod(h * (lit(2654435761L) + q.cast("long") * 2),
-              lit(1073741789L)))))), 1)
-  }
-
   /** The persistable MinHash-store rows: (id BIGINT, sig ARRAY<BIGINT>
-    * length k) under the portable shingle-MinHash. At 8·k bytes per
-    * document (128 B at k=16) the store is still ~0.1% of a text
-    * corpus; append-only, exactly the [[simhashStorePortable]]
-    * contract. */
+    * length 16) under the portable MinHash of word 3-shingles. At 128 B
+    * per document the store is still ~0.1% of a text corpus;
+    * append-only, exactly the [[simhashStorePortable]] contract. */
   def minhashSigStore(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, shingleSize: Int = 3): DataFrame = {
+      df: DataFrame, idCol: String, textCol: String): DataFrame = {
     df.select(col(idCol).cast("long").as("id"),
       graft.functions.Sketches.portableMinhash(coalesce(col(textCol),
-        lit("")), portableMinhashParams(k, shingleSize)).as("sig"))
+        lit("")), portableMinhashParams(16, 3)).as("sig"))
   }
 
   /** Dedup a new batch against a persisted MinHash signature store
-    * (rows of [[minhashSigStore]] with the same `k`, `shingleSize`): a
-    * batch doc is a duplicate iff some store or smaller-id batch
-    * signature has an IDENTICAL slice in one of the `bands` bands of
-    * k / bands positions and agrees on at least `minAgree` of all k
-    * positions (integer est-Jaccard ≥ minAgree/k). The band key is a
+    * (rows of [[minhashSigStore]]): a batch doc is a duplicate iff some
+    * store or smaller-id batch signature has an IDENTICAL slice in one
+    * of the 4 bands of 4 positions and agrees on at least 8 of all 16
+    * positions (integer est-Jaccard ≥ 1/2). The band key is a
     * polynomial fold of the slice, so the join carries the slice itself
-    * as an exact residual. `useBloom` and `persistSigs` as for
-    * [[incrementalDedupSimhash]]. Returns (doc_id, sig, is_dup,
-    * dup_src). */
+    * as an exact residual. `useBloom` and the checkpointed batch
+    * signatures as for [[incrementalDedupSimhash]]. Returns (doc_id,
+    * sig, is_dup, dup_src). */
   def incrementalDedupMinhash(
       storeSigs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
-      k: Int = 16, shingleSize: Int = 3, bands: Int = 4, minAgree: Int = 8,
-      useBloom: Boolean = true, persistSigs: Boolean = true): DataFrame = {
-    require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
-    require(minAgree >= 0 && minAgree <= k,
-      s"minAgree must be in 0..$k, got $minAgree")
-    val r = k / bands
+      useBloom: Boolean = true): DataFrame = {
+    val (bands, r, minAgree) = (4, 4, 8)
     // slice values < 2^30, so acc*31 + v stays < 2^35
     val sliceBands = array((0 until bands).map { b =>
       val s = slice(col("sig"), b * r + 1, r)
@@ -651,9 +525,8 @@ object Dedup {
     }: _*)
     val agree = aggregate(zip_with(col("sig_a"), col("sig_b"),
       (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
-    BandJoin.store(storeSigs,
-      minhashSigStore(batch, idCol, textCol, k, shingleSize),
-      sliceBands, agree >= minAgree, useBloom, persistSigs)
+    BandJoin.store(storeSigs, minhashSigStore(batch, idCol, textCol),
+      sliceBands, agree >= minAgree, useBloom, persistSigs = true)
   }
 
   /** Wide-signature store rows: (id, sig0, sig1) — two independent
@@ -700,7 +573,7 @@ object Dedup {
       idCol: String, textCol: String,
       maxHamming: Int = 1, n: Long = -1L,
       narrowMax: Long = incrementalStoreNarrowMax,
-      useBloom: Boolean = true, persistSigs: Boolean = true): DataFrame = {
+      persistSigs: Boolean = true): DataFrame = {
     // the wide mode runs at 2·maxHamming, and its 4-chunk pigeonhole
     // only covers hamming ≤ 3
     require(maxHamming >= 0 && maxHamming <= 1,
@@ -709,10 +582,10 @@ object Dedup {
     if (size <= narrowMax)
       BandJoin.store(storeSigs, simhashStorePortableWide(batch, idCol, textCol),
         chunks(Seq(col("sig0")), 4, 8, 30), hamming("sig0") <= maxHamming,
-        useBloom, persistSigs)
+        useBloom = true, persistSigs)
     else
       incrementalDedupSimhashWide(storeSigs, batch, idCol, textCol,
-        2 * maxHamming, useBloom, persistSigs)
+        2 * maxHamming, useBloom = true, persistSigs = persistSigs)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Real decoded image features (javax.imageio path): dimensions read
@@ -554,9 +554,9 @@ object Multimodal {
       .toDF("doc_id", "frame_idx", "frame")
   }
 
-  /** End-to-end demo used by the rows-only query: synth media → decode →
+  /** End-to-end demo behind `pipe_multimodal`: synth media → decode →
     * per-format feature aggregate. */
-  def featureSummary(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def featureSummary(docs: DataFrame): DataFrame = {
     val media = withSyntheticMedia(docs.select(col("doc_id")), "doc_id")
     decodeFeatures(media, parallelism = 8).toDF()
       .groupBy(col("format"))

@@ -16,22 +16,10 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Cosine similarity of two double arrays — the codegen'd CosineSim
-    * expression (functions/SketchExpressions.scala). Requires
-    * Sketches.register on the session; every Similarity entry point
-    * registers, so only direct Column-level use needs to. */
+    * expression (functions/SketchExpressions.scala); the session needs
+    * GraftExtensions, as every `Engine.session` has. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.Sketches.cosine(a, b)
-
-  /** The higher-order-function formulation, kept as the executable spec
-    * for CosineSim (bit-for-bit equivalence asserted in OperatorSpec):
-    * identical left-to-right folds, interpreted per element. */
-  private[graft] def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
-    val na = sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
-    val nb = sqrt(aggregate(b, lit(0.0), (acc, x) => acc + x * x))
-    dot / (na * nb)
-  }
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
@@ -86,30 +74,12 @@ object Similarity {
         - 1000000L).toDouble / 1000000.0)
   }
 
-  /** Sign-bit array (length `planes`) against a literal plane matrix. */
-  private def lshBits(vec: Column, matrix: Seq[Seq[Double]]): Column = {
-    val m = typedlit(matrix)
-    transform(sequence(lit(0), lit(matrix.size - 1)), p =>
-      when(aggregate(
-        zip_with(vec, element_at(m, p + 1), (x, w) => x * w),
-        lit(0.0), (acc, x) => acc + x) > 0, 1L).otherwise(0L))
-  }
-
-  /** Random-hyperplane signature packed into a long (≤ 62 planes) — the
-    * HOF formulation, kept as the executable spec for the codegen'd
-    * HyperplaneSignature expression (bit-for-bit equivalence asserted in
-    * OperatorSpec; the library path uses the expression). */
-  private[graft] def lshSignature(vec: Column, planes: Int,
-      salt: Int = 0): Column =
-    aggregate(lshBits(vec, planeMatrix(salt, planes, 64)),
-      lit(0L), (acc, b) => acc * 2 + b)
-
   /** Approximate near-neighbor pairs via banded random-hyperplane LSH
     * on the [[BandJoin.pairs]] core: `rotations` independent
     * `planes`-bit signatures, each cut into `bandBits`-bit bands; pairs
     * colliding in any band are verified by exact cosine ≥ `threshold`
     * (P[found] = 1-(1-p^bandBits)^(bands·rotations), p = 1-θ/π).
-    * Returns (id_a, id_b, cos).
+    * Vectors are 64-dimensional. Returns (id_a, id_b, cos).
     *
     * SIZE THE BANDS TO THE CORPUS (r9 rehearsal finding): a band has
     * only 2^bandBits buckets and that count does not grow with the
@@ -123,7 +93,7 @@ object Similarity {
   def lshNearPairs(
       corpus: DataFrame, idCol: String, vecCol: String,
       planes: Int = 16, bandBits: Int = 4, rotations: Int = 3,
-      threshold: Double = 0.85, dim: Int = 64): DataFrame = {
+      threshold: Double = 0.85): DataFrame = {
     require(planes % bandBits == 0, "planes must be divisible by bandBits")
     val bands = planes / bandBits
     val mask = (1L << bandBits) - 1
@@ -134,10 +104,10 @@ object Similarity {
         asDouble(col(vecCol)).as("vec"))
       .select(col("id") +: col("vec") +: rots.zipWithIndex.map {
         case (r, rot) => graft.functions.Sketches.hyperplaneSignature(
-          col("vec"), typedlit(planeMatrix(rot, planes, dim))).as(r)
+          col("vec"), typedlit(planeMatrix(rot, planes, 64))).as(r)
       }: _*)
     BandJoin.pairs(sigs,
-      array((for ((r, rot) <- rots.zipWithIndex; b <- 0 until bands)
+      array((for (r <- rots; b <- 0 until bands)
         yield shiftright(col(r), b * bandBits).bitwiseAND(lit(mask))
       ): _*),
       Seq(round(cosine(col("vec_a"), col("vec_b")), 6).as("cos")),
@@ -165,21 +135,6 @@ object Similarity {
   private def nearestCells(vec: Column, centroids: Seq[Seq[Double]],
       nProbe: Int): Column =
     graft.functions.Sketches.nearestCellsCos(vec, centroids, nProbe)
-
-  /** The higher-order-function formulation, kept as the executable spec
-    * for the NearestCells kernel (cosine metric; equivalence asserted
-    * in PipelineSpec): (negated similarity, cellId) structs sorted
-    * ascending → top nProbe cells. The interpreted form allocates and
-    * sorts an nCells-struct array per row — it dominated the ×50
-    * composed-ANN rehearsal before the r11 kernel. */
-  private[graft] def nearestCellsHof(vec: Column, centroids: Seq[Seq[Double]],
-      nProbe: Int): Column = {
-    val m = typedlit(centroids)
-    val scored = transform(sequence(lit(1), lit(centroids.size)), c =>
-      struct((lit(-1.0) * cosine(vec, element_at(m, c))).as("negSim"),
-        c.as("cell")))
-    transform(slice(array_sort(scored), 1, nProbe), s => s.getField("cell"))
-  }
 
   /** IVF sizing rule (the nCells analogue of lshNearPairs' band rule —
     * empirically validated, see SCALE.md "IVF sizing rule" and the
@@ -303,37 +258,12 @@ object Similarity {
   /** PQ code array (m codes, 0-based) for `vec` against literal
     * per-subspace codebooks — the codegen'd PqCodes kernel
     * (functions/SketchExpressions.scala): the interpreted HOF
-    * formulation below costs m·k nested lambda folds per row and
-    * dominated the PipeScale PQ stage ~100×. Bit-identical semantics
-    * (ascending-dimension fold, first-min tie) asserted against the
-    * HOF spec in PipelineSpec. */
+    * formulation (KernelSpecs.pqCodesHof, src/test) costs m·k nested
+    * lambda folds per row and dominated the PipeScale PQ stage ~100×.
+    * Bit-identical semantics (ascending-dimension fold, first-min tie)
+    * asserted against that spec in PipelineSpec. */
   private def pqCodes(vec: Column, cbs: Seq[Seq[Seq[Double]]]): Column =
     graft.functions.Sketches.pqCodes(vec, cbs)
-
-  /** The higher-order-function formulation, kept as the executable spec
-    * for the PqCodes kernel (equivalence asserted in PipelineSpec):
-    * code j = index of the codeword of subspace j with the smallest
-    * squared L2 distance to the vector's j-th slice, first index on
-    * ties (array_position finds the first equal value — the same rule
-    * the oracle's list_position and the kernel's strict < apply). The
-    * subspace slice is let-bound via the 1-element transform wrapper
-    * (HOF lambdas are not CSE'd). */
-  private[graft] def pqCodesHof(vec: Column, cbs: Seq[Seq[Seq[Double]]]): Column = {
-    val m = cbs.size
-    val sub = cbs.head.head.size
-    val k = cbs.head.size
-    val cbLit = typedlit(cbs)
-    transform(sequence(lit(0), lit(m - 1)), j => {
-      val cb = element_at(cbLit, j + 1)
-      element_at(
-        transform(array(slice(vec, j * lit(sub) + 1, lit(sub))), sv => {
-          val dists = transform(sequence(lit(1), lit(k)),
-            c => l2sq(sv, element_at(cb, c)))
-          (array_position(dists, array_min(dists)) - 1).cast("int")
-        }),
-        1)
-    })
-  }
 
   /** PQ sizing rule — the (codebook size, rerank factor) analogue of
     * ivfParams/the LSH band rule, validated by PipeScale at ×20/×50
@@ -498,16 +428,6 @@ object Similarity {
   private def nearestCellsL2(vec: Column, centroids: Seq[Seq[Double]],
       nProbe: Int): Column =
     graft.functions.Sketches.nearestCellsL2(vec, centroids, nProbe)
-
-  /** Executable spec for the NearestCells kernel, L2 metric
-    * (equivalence asserted in PipelineSpec). */
-  private[graft] def nearestCellsL2Hof(vec: Column,
-      centroids: Seq[Seq[Double]], nProbe: Int): Column = {
-    val m = typedlit(centroids)
-    val scored = transform(sequence(lit(1), lit(centroids.size)), c =>
-      struct(l2sq(vec, element_at(m, c)).as("dist"), c.as("cell")))
-    transform(slice(array_sort(scored), 1, nProbe), s => s.getField("cell"))
-  }
 
   /** IVF × PQ composition — the production ANN shape at 100 TB: the
     * corpus is scanned ONCE producing (id, cell, m-byte codes); a query

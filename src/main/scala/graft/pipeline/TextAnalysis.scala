@@ -39,9 +39,8 @@ object TextAnalysis {
     * noise, stopword presence, mean word length sanity. Deterministic and
     * SQL-expressible (oracled in PipelineQueries). The stopword count
     * goes through the codegen'd InSetCounts expression (an interpreted
-    * `filter(words, isInCollection)` HOF dominated the scan otherwise);
-    * requires Sketches.register on the session — TextAnalysis call sites
-    * in the query corpus register. */
+    * `filter(words, isInCollection)` HOF dominated the scan otherwise),
+    * which the session's GraftExtensions injects. */
   def qualityScore(text: Column, stopwords: Seq[String]): Column = {
     val nChars = length(text).cast("double")
     val words = split(text, "\\s+")
@@ -90,20 +89,6 @@ object TextAnalysis {
     struct(best.getField("lang").as("lang"), best.getField("score").as("score"))
   }
 
-  /** The HOF formulation of langId, kept as the executable spec for the
-    * InSetCounts path (equivalence asserted in OperatorSpec). */
-  private[graft] def langIdHof(text: Column): Column = {
-    val words = split(lower(text), "\\s+")
-    val scored = array(langDicts.zipWithIndex.map { case ((lang, dict), i) =>
-      struct(
-        size(filter(words, w => w.isInCollection(dict))).cast("long").as("score"),
-        lit(-i).as("rank_desc"),
-        lit(lang).as("lang"))
-    }: _*)
-    val best = array_max(scored)
-    struct(best.getField("lang").as("lang"), best.getField("score").as("score"))
-  }
-
   /** Content fingerprint: md5 of whitespace/case-normalized text — the
     * canonical-form key for exact-after-normalization dedup. */
   def fingerprintMd5(text: Column): Column =
@@ -114,9 +99,7 @@ object TextAnalysis {
     * word-n-gram level, and the longest run of one word repeated
     * back-to-back. High values mark boilerplate/spam for a quality
     * filter. Distinct n-gram counts come from the codegen'd Shingles
-    * expression; everything is map-side arithmetic — no shuffle.
-    * Requires Sketches.register on the session (query call sites
-    * register). */
+    * expression; everything is map-side arithmetic — no shuffle. */
   def dupWordFrac(text: Column): Column = {
     val ws = split(text, "\\s+")
     round(lit(1.0) - size(array_distinct(ws)).cast("double")
@@ -165,21 +148,11 @@ object TextAnalysis {
     * polynomial (acc*131 + cp) mod 1e9+7, document fingerprint =
     * (acc*31 + h(word)) mod 1e9+7 — no engine-specific hash, so an
     * external oracle (DuckDB list_reduce over unicode()) reproduces it
-    * bit-for-bit. Via the codegen'd RollingFpPortable expression (the
-    * HOF spec below ran one interpreted lambda per CHARACTER). */
+    * bit-for-bit. Via the codegen'd RollingFpPortable expression (its
+    * HOF spec, KernelSpecs.fingerprintPortableHof in src/test, runs one
+    * interpreted lambda per CHARACTER). */
   def fingerprintPortable(text: Column): Column =
     graft.functions.Sketches.rollingFpPortable(split(text, "\\s+"))
-
-  /** HOF spec for fingerprintPortable. */
-  private[graft] def fingerprintPortableHof(text: Column): Column = {
-    val p = 1000000007L
-    aggregate(
-      transform(
-        filter(split(text, "\\s+"), w => w =!= ""),
-        w => aggregate(codepoints(w),
-          lit(0L), (acc, cp) => (acc * 131 + cp) % p)),
-      lit(0L), (acc, h) => (acc * 31 + h) % p)
-  }
 
   /** Markup cleanup for crawled text: drop HTML/XML tags, collapse runs
     * of whitespace, trim. Pure codegen'd regexp_replace chain (Java and
@@ -324,8 +297,7 @@ object TextAnalysis {
   def perplexityBuckets(
       train: org.apache.spark.sql.DataFrame,
       eval: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String,
-      alpha: Double = 1.0): org.apache.spark.sql.DataFrame = {
+      idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
     // materialize ONCE: the LM-scoring chain (bigram explode + count
     // joins) has THREE consumers — the CDF collect here, ccnetSample's
     // per-class quota counts, and the caller's final action; without
@@ -338,7 +310,7 @@ object TextAnalysis {
     // simhashPairsPortable warns about). At 100 TB: checkpoint the
     // scored slice to storage.
     val scored = Materialize.checkpoint(
-      crossEntropyScore(train, eval, idCol, textCol, alpha))
+      crossEntropyScore(train, eval, idCol, textCol))
     val cdf = scored.groupBy(col("xent")).agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).sortBy(_._1)
     require(cdf.nonEmpty, "perplexityBuckets: no scored documents")
@@ -359,7 +331,7 @@ object TextAnalysis {
     * deterministic per-bucket quota sample (downsample-only, exact
     * integer mix — [[graft.operators.Sampling.rebalanceToTarget]]'s
     * md5-ranked selection, so reruns and external engines agree).
-    * Default mix 3:2:1 keeps the head-heavy slice CCNet's filter
+    * The 3:2:1 head:middle:tail mix keeps the head-heavy slice CCNet's filter
     * keeps. One LM-scoring pass, one tiny CDF collect, one per-bucket
     * ranked window — no global sort anywhere. Degenerate corpora with
     * fewer than 3 distinct xent values leave a tercile empty and fail
@@ -368,10 +340,8 @@ object TextAnalysis {
   def ccnetSample(
       train: org.apache.spark.sql.DataFrame,
       eval: org.apache.spark.sql.DataFrame,
-      idCol: String, textCol: String,
-      weights: Map[String, Int] = Map("head" -> 3, "middle" -> 2, "tail" -> 1),
-      alpha: Double = 1.0): org.apache.spark.sql.DataFrame =
+      idCol: String, textCol: String): org.apache.spark.sql.DataFrame =
     graft.operators.Sampling.rebalanceToTarget(
-      perplexityBuckets(train, eval, idCol, textCol, alpha),
-      "bucket", "doc_id", weights)
+      perplexityBuckets(train, eval, idCol, textCol),
+      "bucket", "doc_id", Map("head" -> 3, "middle" -> 2, "tail" -> 1))
 }

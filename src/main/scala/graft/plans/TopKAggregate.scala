@@ -260,8 +260,8 @@ object TopKAggregationRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case gl @ GlobalLimit(Literal(n: Int, _),
-        ll @ LocalLimit(Literal(n2: Int, _),
-        sort @ Sort(orders, true, agg: Aggregate, _)))
+        LocalLimit(Literal(n2: Int, _),
+        Sort(orders, true, agg: Aggregate, _)))
         if n == n2 && n > 0 && n <= MaxK =>
       fuse(n, orders, agg) match {
         case Some(topk) =>

@@ -248,7 +248,7 @@ object Unparser {
     // strip qualifiers: generated SQL scopes names through the derived
     // tables, and stale qualifiers (t.`x`) would dangle
     case a: Attribute => s"`${a.name}`"
-    case al @ Alias(child, name) => s"${exprSql(child, c)} AS `$name`"
+    case Alias(child, name) => s"${exprSql(child, c)} AS `$name`"
     // subquery expressions carry a nested PLAN — Expression.sql can't
     // render those executably (it prints an exprId tag), so the plan
     // recursion re-enters here (reference: unparser subquery_to_sql)

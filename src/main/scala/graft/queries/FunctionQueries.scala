@@ -621,7 +621,8 @@ object FunctionQueries {
 
     // ── arrow_typeof / arrow_cast (type introspection + Arrow-name cast,
     //    reference functions/src/core/{arrow_typeof,arrow_cast}.rs; the
-    //    SURVEY §1 type-mapping policy, executable) ─────────────────────
+    //    SURVEY §1 type-mapping policy, executable). arrow_typeof is
+    //    Spark's own typeof ──────────────────────────────────────────────
     "func_typeof" -> Q("""
       |SELECT DISTINCT
       |  lower(typeof(l_orderkey)) AS t_key,
@@ -633,15 +634,15 @@ object FunctionQueries {
       |       WHEN 'varchar' THEN 'string' END AS t_caststr,
       |  lower(typeof(CAST(l_orderkey AS DECIMAL(20,0)))) AS t_castu64
       |FROM lineitem""") { (s, d) =>
-      import graft.functions.GraftFunctions._
+      import graft.functions.GraftFunctions.arrow_cast
       Engine.table(s, d, "lineitem")
         .select(
-          arrow_typeof(col("l_orderkey")).as("t_key"),
-          arrow_typeof(col("l_quantity")).as("t_qty"),
-          arrow_typeof(col("l_returnflag")).as("t_flag"),
-          arrow_typeof(arrow_cast(col("l_linenumber"), "Int64")).as("t_cast64"),
-          arrow_typeof(arrow_cast(col("l_quantity"), "Utf8")).as("t_caststr"),
-          arrow_typeof(arrow_cast(col("l_orderkey"), "UInt64")).as("t_castu64"))
+          typeof(col("l_orderkey")).as("t_key"),
+          typeof(col("l_quantity")).as("t_qty"),
+          typeof(col("l_returnflag")).as("t_flag"),
+          typeof(arrow_cast(col("l_linenumber"), "Int64")).as("t_cast64"),
+          typeof(arrow_cast(col("l_quantity"), "Utf8")).as("t_caststr"),
+          typeof(arrow_cast(col("l_orderkey"), "UInt64")).as("t_castu64"))
         .distinct()
     },
 

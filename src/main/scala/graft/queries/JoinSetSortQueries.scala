@@ -274,7 +274,7 @@ object JoinSetSortQueries {
     // ── VALUES literal relation ──────────────────────────────────────────
     "values_literal" -> Q("""
       |SELECT * FROM (VALUES (1, 'one'), (2, 'two'), (3, 'three')) t(id, name)
-      |ORDER BY id""") { (s, d) =>
+      |ORDER BY id""") { (s, _) =>
       import s.implicits._
       Seq((1, "one"), (2, "two"), (3, "three")).toDF("id", "name")
         .orderBy(col("id"))

@@ -53,7 +53,7 @@ object MiscQueries {
       |  SELECT CAST(1 AS BIGINT) AS n
       |  UNION ALL
       |  SELECT n + 1 FROM t WHERE n < 30)
-      |SELECT n FROM t ORDER BY n""") { (s, d) =>
+      |SELECT n FROM t ORDER BY n""") { (s, _) =>
       // single-partition seed: a 1-row frontier scheduled as 32 tasks
       // per iteration is pure overhead (narrow steps preserve the
       // partitioning, so the whole recursion stays 1-task-per-job)
@@ -76,7 +76,7 @@ object MiscQueries {
       |  SELECT CAST(1 AS BIGINT) AS n
       |  UNION ALL
       |  SELECT n + 1 FROM t WHERE n < 30)
-      |SELECT n FROM t ORDER BY n""") { (s, d) =>
+      |SELECT n FROM t ORDER BY n""") { (s, _) =>
       s.sql("""
         WITH RECURSIVE t(n) AS (
           SELECT CAST(1 AS BIGINT) AS n

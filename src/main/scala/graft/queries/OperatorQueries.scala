@@ -368,7 +368,7 @@ object OperatorQueries {
       |  ('spark.graft.answer', '42'),
       |  ('spark.sql.adaptive.enabled', 'true'),
       |  ('spark.sql.session.timeZone', 'UTC')) AS t(name, value)
-      |ORDER BY name""") { (s, d) =>
+      |ORDER BY name""") { (s, _) =>
       val ctx = graft.GraftContext(s)
       ctx.sql("SET spark.graft.answer=42")
       ctx.registerSettingsView()

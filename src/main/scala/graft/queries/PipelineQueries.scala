@@ -1982,7 +1982,7 @@ object PipelineQueries {
       |       round(avg((acc % 1000000) / 1000000.0) + 1e-9, 4) AS avg_brightness,
       |       max(width) AS max_w, max(height) AS max_h
       |FROM dec GROUP BY format ORDER BY format""") { (s, d) =>
-      Multimodal.featureSummary(s, Engine.table(s, d, "documents"))
+      Multimodal.featureSummary(Engine.table(s, d, "documents"))
     },
 
     // ── REAL codec roundtrip (javax.imageio): render deterministic

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction (beyond the reference — DataFusion reads what it
   * is given; at 100 TB ingest the small-file problem is operational

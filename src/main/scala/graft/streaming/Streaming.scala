@@ -34,31 +34,31 @@ object Streaming {
       .select(col("window.start").as("w_start"), col("event_type"),
         col("n"), col("v"))
 
-  /** Sliding-window aggregate. */
-  def slidingCounts(events: DataFrame, width: String = "1 hour",
-      slide: String = "30 minutes", watermark: String = "2 hours"): DataFrame =
+  /** Sliding-window aggregate: 1-hour windows every 30 minutes, 2-hour
+    * watermark. */
+  def slidingCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width, slide))
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("n"))
 
-  /** Session windows per user (gap-based). */
-  def sessionCounts(events: DataFrame, gap: String = "10 minutes",
-      watermark: String = "2 hours"): DataFrame =
+  /** Session windows per user: a 10-minute gap closes a session,
+    * 2-hour watermark. */
+  def sessionCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
+      .withWatermark("ts", "2 hours")
+      .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("s_start"),
         col("session_window.end").as("s_end"), col("user_id"), col("n_events"))
 
   /** Stream-stream interval join: clicks joined to purchases by the same
-    * user within [0, 30 min] after the click (reference capability:
-    * SymmetricHashJoinExec with interval-pruned state). */
-  def clickToPurchase(events: DataFrame,
-      watermark: String = "1 hour"): DataFrame =
-    intervalJoin(events, watermark, "inner")
+    * user within [0, 30 min] after the click, 1-hour watermarks
+    * (reference capability: SymmetricHashJoinExec with interval-pruned
+    * state). */
+  def clickToPurchase(events: DataFrame): DataFrame =
+    intervalJoin(events, "1 hour", "inner")
 
   /** LEFT OUTER stream-stream interval join: every click emits exactly
     * once — matched rows immediately, unmatched rows with NULL purchase
@@ -104,14 +104,13 @@ object Streaming {
   }
 
   /** Streaming deduplication — the training-pipeline staple: duplicate
-    * records arriving within the watermark window are dropped by key;
-    * state is bounded by the watermark (reference has no streaming dedup
+    * records arriving within the 1-hour watermark window are dropped by
+    * key; state is bounded by the watermark (reference has no streaming dedup
     * — an extension, like as-of join). Batch mode degenerates to
     * dropDuplicates. */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-      watermark: String = "1 hour"): DataFrame =
+  def dedupStream(events: DataFrame, keys: Seq[String]): DataFrame =
     if (events.isStreaming)
-      events.withWatermark("ts", watermark)
+      events.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(keys)
     else events.dropDuplicates(keys)
 

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Engine
 import graft.pipeline.{Clustering, Decontamination, Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 
 /** Pipeline-tier scale rehearsal (r9): the TPC-DS gate has ×10/×100/×300
   * rehearsals, but the LLM-pipeline operators' 100 TB posture was
@@ -95,7 +95,7 @@ object PipeScale {
         .map(r => r.getLong(0) -> ((r.getBoolean(2),
           if (r.isNullAt(3)) -1L else r.getLong(3)))).toMap
     }
-    Thread.sleep(2000) // listener bus drain
+    GraftSqlShim.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(incMeter)
     val histTextBytes = docsN.filter(col("doc_id") % fac =!= 0)
       .agg(sum(length(col("text")))).head().getLong(0)
@@ -140,7 +140,7 @@ object PipeScale {
         .map(r => r.getLong(0) -> ((r.getBoolean(2),
           if (r.isNullAt(3)) -1L else r.getLong(3)))).toMap
     }
-    Thread.sleep(2000) // listener bus drain
+    GraftSqlShim.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(mhMeter)
     println(f"[pipescale] incremental minhash ×$fac shuffle: " +
       f"write=${mhMeter.write.get / 1e6}%.1f MB " +
@@ -262,7 +262,7 @@ object PipeScale {
           (r.getLong(0) / fac, r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
     }
-    Thread.sleep(2000) // listener bus drain
+    GraftSqlShim.drainListenerBus(spark.sparkContext)
     spark.sparkContext.removeSparkListener(meter)
     val tokensN = docsN
       .agg(sum(graft.pipeline.TextAnalysis.tokenCount(col("text"))))

@@ -9,7 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * Attach with addSparkListener, detach BEFORE
   * running any of the caller's own bookkeeping aggregations (they
   * would otherwise contaminate the very bytes being measured), and
-  * remember the listener bus is async — sleep or drain before reading. */
+  * drain the async listener bus (`GraftSqlShim.drainListenerBus`)
+  * before reading. */
 class ShuffleMeter extends SparkListener {
   val write = new AtomicLong
   val read = new AtomicLong

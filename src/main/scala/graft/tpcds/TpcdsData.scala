@@ -54,8 +54,8 @@ object TpcdsData {
   private def h(salt: Int, m: Int, cols: String = "id"): String =
     s"cast(pmod(xxhash64($cols, $salt), ${m}L) as int)"
 
-  private def pick(salt: Int, pool: Seq[String], cols: String = "id"): String =
-    s"element_at(array(${pool.map(s => s"'$s'").mkString(",")}), 1 + ${h(salt, pool.size, cols)})"
+  private def pick(salt: Int, pool: Seq[String]): String =
+    s"element_at(array(${pool.map(s => s"'$s'").mkString(",")}), 1 + ${h(salt, pool.size)})"
 
   /** cents → DECIMAL(p,2); cents values are exact in double, so the cast
     * rounds to the exact 2-dp value. */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.DataFrameOps._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,6 +73,26 @@ class ContextSpec extends AnyFunSuite {
     ctx.registerAvro("ctx_avro_t", s"$dir/avro")
     assert(ctx.sql("SELECT count(*) AS n FROM ctx_avro_t").head().getLong(0)
       == src.count())
+  }
+
+  test("write/register round trips return the rows written") {
+    val dir = "/tmp/graft_ctx_roundtrip"
+    val src = ctx.readParquet(s"$sf/nation.parquet")
+    def rows(df: DataFrame) = df.select(src.columns.map(col).toIndexedSeq: _*)
+      .collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+    val want = rows(src)
+    src.writeCsv(s"$dir/csv")
+    ctx.registerCsv("rt_csv", s"$dir/csv")
+    src.writeJson(s"$dir/json")
+    ctx.registerJson("rt_json", s"$dir/json")
+    src.writeParquet(s"$dir/parquet")
+    ctx.registerParquet("rt_parquet", s"$dir/parquet")
+    sources.AvroIo.write(src, s"$dir/avro")
+    ctx.registerAvro("rt_avro", s"$dir/avro")
+    for (t <- Seq("rt_csv", "rt_json", "rt_parquet", "rt_avro"))
+      assert(rows(ctx.table(t)) == want, t)
+    sources.ArrowIpc.write(src, s"$dir/arrow")
+    assert(rows(ctx.readArrow(s"$dir/arrow")) == want, "arrow")
   }
 
   test("settings relation reflects SET statements (df_settings)") {

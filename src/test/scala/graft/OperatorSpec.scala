@@ -187,7 +187,7 @@ class OperatorSpec extends AnyFunSuite {
       val diff = Engine.table(spark, sf, "documents")
         .select(col("doc_id"),
           Dedup.shingles(col("text"), n).as("fast"),
-          graft.pipeline.Dedup.shinglesHof(col("text"), n).as("slow"))
+          KernelSpecs.shinglesHof(col("text"), n).as("slow"))
         .filter(col("fast") =!= col("slow"))
       assert(diff.count() == 0, s"n=$n")
     }
@@ -196,7 +196,7 @@ class OperatorSpec extends AnyFunSuite {
     val edge = Seq("", " ", "a", "a b", "a  b ", "a b c d").toDF("text")
     val rows = edge.select(
       Dedup.shingles(col("text"), 3).as("fast"),
-      graft.pipeline.Dedup.shinglesHof(col("text"), 3).as("slow")).collect()
+      KernelSpecs.shinglesHof(col("text"), 3).as("slow")).collect()
     rows.foreach { r =>
       assert(r.getSeq[String](0) == r.getSeq[String](1), r.toString)
     }
@@ -250,11 +250,11 @@ class OperatorSpec extends AnyFunSuite {
     val docs5 = Engine.table(spark, sf, "documents")
     val diff = docs5.select(col("doc_id"),
         TextAnalysis.langId(col("text")).as("fast"),
-        TextAnalysis.langIdHof(col("text")).as("slow"),
+        KernelSpecs.langIdHof(col("text")).as("slow"),
         TextAnalysis.fingerprintRolling(col("text")).as("fpFast"),
         TextAnalysis.fingerprintRollingHof(col("text")).as("fpSlow"),
         TextAnalysis.fingerprintPortable(col("text")).as("ppFast"),
-        TextAnalysis.fingerprintPortableHof(col("text")).as("ppSlow"))
+        KernelSpecs.fingerprintPortableHof(col("text")).as("ppSlow"))
       .filter(col("fast") =!= col("slow") ||
         col("fpFast") =!= col("fpSlow") || col("ppFast") =!= col("ppSlow"))
     assert(diff.count() == 0)
@@ -268,9 +268,9 @@ class OperatorSpec extends AnyFunSuite {
       .toDF("text")
     val rows = edge.select(
       TextAnalysis.langId(col("text")).as("f"),
-      TextAnalysis.langIdHof(col("text")).as("s"),
+      KernelSpecs.langIdHof(col("text")).as("s"),
       TextAnalysis.fingerprintPortable(col("text")).as("pf"),
-      TextAnalysis.fingerprintPortableHof(col("text")).as("ps")).collect()
+      KernelSpecs.fingerprintPortableHof(col("text")).as("ps")).collect()
     rows.foreach { r =>
       assert(r.getStruct(0) == r.getStruct(1), r.toString)
       assert(r.getLong(2) == r.getLong(3), r.toString)
@@ -305,7 +305,7 @@ class OperatorSpec extends AnyFunSuite {
       .filter(col("ida") < 40 && col("ida") < col("idb"))
     val diff = pairs.select(
         Similarity.cosine(col("va"), col("vb")).as("fast"),
-        Similarity.cosineHof(col("va"), col("vb")).as("slow"))
+        KernelSpecs.cosineHof(col("va"), col("vb")).as("slow"))
       .filter(col("fast") =!= col("slow") ||
         col("fast").isNull =!= col("slow").isNull)
     assert(diff.count() == 0)
@@ -317,7 +317,7 @@ class OperatorSpec extends AnyFunSuite {
       .toDF("a", "b")
     val w = weird.select(
       Similarity.cosine(col("a"), col("b")).as("fast"),
-      Similarity.cosineHof(col("a"), col("b")).as("slow")).collect()
+      KernelSpecs.cosineHof(col("a"), col("b")).as("slow")).collect()
     w.foreach { r => assert(r.isNullAt(0) && r.isNullAt(1)) }
   }
 
@@ -329,7 +329,7 @@ class OperatorSpec extends AnyFunSuite {
       .select(col("vec_id"),
         graft.functions.Sketches.hyperplaneSignature(col("v"),
           typedlit(Similarity.planeMatrix(7, 16, 64))).as("fast"),
-        Similarity.lshSignature(col("v"), 16, salt = 7).as("slow"))
+        KernelSpecs.lshSignature(col("v"), 16, salt = 7).as("slow"))
       .filter(col("fast") =!= col("slow"))
     assert(diff.count() == 0)
   }
@@ -340,7 +340,7 @@ class OperatorSpec extends AnyFunSuite {
       .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
       .select(col("doc_id"),
         Dedup.minhashSignature(col("sh"), k).as("fast"),
-        Dedup.minhashSignatureHof(col("sh"), k).as("ref"))
+        KernelSpecs.minhashSignatureHof(col("sh"), k).as("ref"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>

@@ -112,7 +112,7 @@ class PipelineSpec extends AnyFunSuite {
     val rows = docs.select(
         graft.functions.Sketches.portableMinhash(col("text"),
           Dedup.portableMinhashParams(16, 3)).as("k"),
-        Dedup.portableMinhashHof(col("text"), 16, 3).as("h"))
+        KernelSpecs.portableMinhashHof(col("text"), 16, 3).as("h"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -485,12 +485,12 @@ class PipelineSpec extends AnyFunSuite {
     for (np <- Seq(1, 4)) {
       val l2 = emb.select(
           graft.functions.Sketches.nearestCellsL2(v, cents, np).as("k"),
-          Similarity.nearestCellsL2Hof(v, cents, np).as("h"))
+          KernelSpecs.nearestCellsL2Hof(v, cents, np).as("h"))
         .filter(not(col("k") <=> col("h"))).count()  // null-safe: a null-vs-value divergence must count
       assert(l2 == 0, s"L2 kernel/HOF diverge on $l2 rows (nProbe=$np)")
       val cos = emb.select(
           graft.functions.Sketches.nearestCellsCos(v, cents, np).as("k"),
-          Similarity.nearestCellsHof(v, cents, np).as("h"))
+          KernelSpecs.nearestCellsHof(v, cents, np).as("h"))
         .filter(not(col("k") <=> col("h"))).count()  // null-safe: a null-vs-value divergence must count
       assert(cos == 0, s"cos kernel/HOF diverge on $cos rows (nProbe=$np)")
     }
@@ -505,8 +505,8 @@ class PipelineSpec extends AnyFunSuite {
       val mismatch = docs.select(col("doc_id"),
           graft.functions.Sketches.portableSimhash30(col("text"), mult)
             .as("kernel"),
-          Dedup.simhash30FromHashes(
-            Dedup.tokenHashesPortableScrambled(col("text"), mult))
+          KernelSpecs.simhash30FromHashes(
+            KernelSpecs.tokenHashesPortableScrambled(col("text"), mult))
             .as("hof"))
         .filter(not(col("kernel") <=> col("hof")))  // null-safe compare
         .count()
@@ -522,7 +522,7 @@ class PipelineSpec extends AnyFunSuite {
       val mismatch = docs.select(
           graft.functions.Sketches.dupWindowHashes(col("text"), fam)
             .as("kernel"),
-          Dedup.dupWindowHashesHof(col("text"), fam).as("hof"))
+          KernelSpecs.dupWindowHashesHof(col("text"), fam).as("hof"))
         .filter(not(col("kernel") <=> col("hof")))  // null-safe compare
         .count()
       assert(mismatch == 0,
@@ -673,10 +673,10 @@ class PipelineSpec extends AnyFunSuite {
 
   test("portable wide simhash: blocking == brute force, 60-bit signature") {
     val sigs = docs.select(col("doc_id"),
-      Dedup.simhash30FromHashes(
-        Dedup.tokenHashesPortableScrambled(col("text"), 2654435761L)).as("s0"),
-      Dedup.simhash30FromHashes(
-        Dedup.tokenHashesPortableScrambled(col("text"), 2246822519L)).as("s1"))
+      KernelSpecs.simhash30FromHashes(
+        KernelSpecs.tokenHashesPortableScrambled(col("text"), 2654435761L)).as("s0"),
+      KernelSpecs.simhash30FromHashes(
+        KernelSpecs.tokenHashesPortableScrambled(col("text"), 2246822519L)).as("s1"))
     val brute = sigs.as("a").crossJoin(sigs.as("b"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
@@ -788,7 +788,7 @@ class PipelineSpec extends AnyFunSuite {
     val v = transform(col("embedding"), _.cast("double"))
     val both = emb.select(col("vec_id"),
         graft.functions.Sketches.pqCodes(v, cbs).as("kernel"),
-        Similarity.pqCodesHof(v, cbs).as("hof"))
+        KernelSpecs.pqCodesHof(v, cbs).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -1066,7 +1066,7 @@ class PipelineSpec extends AnyFunSuite {
     for (bi <- Seq(true, false)) {
       val mism = docs.select(
           Classifier.buckets(col("text"), d, bi).as("k"),
-          Classifier.bucketsHof(col("text"), d, bi).as("h"))
+          KernelSpecs.bucketsHof(col("text"), d, bi).as("h"))
         .filter(not(col("k") === col("h"))).count()
       assert(mism == 0, s"kernel != HOF spec (bigrams=$bi)")
     }
@@ -1075,7 +1075,7 @@ class PipelineSpec extends AnyFunSuite {
     val gsMism = docs.select(
         graft.functions.Sketches.gatherSum(
           Classifier.buckets(col("text"), d), wArb).as("k"),
-        Classifier.gatherSumHof(
+        KernelSpecs.gatherSumHof(
           Classifier.buckets(col("text"), d), wArb).as("h"))
       .filter(col("k") =!= col("h")).count()
     assert(gsMism == 0, "GatherSum != HOF fold")

@@ -8,16 +8,9 @@ object SparkTestSession {
 
   /** Wait until the listener bus has delivered every event posted so
     * far: it is asynchronous, so a listener's counts are only complete
-    * after this. Reflective because `listenerBus` is private[spark]. */
-  def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get
-      .invoke(sc)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1)
-      .map(_.invoke(bus, java.lang.Long.valueOf(30000L)))
-      .getOrElse(bus.getClass.getMethod("waitUntilEmpty").invoke(bus))
-  }
+    * after this. */
+  def drainListenerBus(): Unit =
+    org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark.sparkContext)
 }
 
 /** Smoke: every registered query builds a plan and executes at sf0.001.
@@ -42,5 +35,9 @@ class QueriesSpec extends AnyFunSuite {
 
   test("oracle keys are a subset of query keys") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("every query carries a DuckDB oracle") {
+    assert(SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet == Set())
   }
 }
